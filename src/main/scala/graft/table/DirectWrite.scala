@@ -3,14 +3,20 @@ package graft.table
 import java.util.UUID
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
-import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobContext, JobID, TaskAttemptContext,
+  TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.FileFormatWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 
 /** Rename-free data-object committer: every part file is CREATED at its
   * final location under a fresh `_table_<t>_<uuid>`-style object name —
@@ -132,8 +138,18 @@ private[graft] final class DirectCommitProtocol(
     }
 }
 
-/** Driver-side entry: run one distributed parquet write whose files land
-  * directly under final object names (see [[DirectCommitProtocol]]).
+/** Driver-side entry for data-object writes whose files land directly
+  * under final object names:
+  *
+  *   - [[write]] runs one distributed parquet job through
+  *     [[DirectCommitProtocol]] — inserts, merges, maintenance rewrites;
+  *   - [[writeLocal]] writes rows already in driver memory (the
+  *     `writeRow` buffer) as one object from the driver, with no Spark
+  *     job. It needs no commit protocol: there is one writer, no task
+  *     attempts to arbitrate, and the object's fresh UUID name means no
+  *     other writer can touch it, so the three legs above hold as they
+  *     are — a failed write deletes its partial object, and a crash
+  *     leaves unregistered debris that vacuum reclaims.
   */
 private[graft] object DirectWrite {
 
@@ -175,6 +191,44 @@ private[graft] object DirectWrite {
         options = Map.empty)
     }
     committer.committedFiles
+  }
+
+  /** Write `df`'s rows as the single data object `name` under
+    * `rootDir`, from the driver — the layout, codec and footer metadata
+    * of a one-task [[write]] (`<name>/part-00000-c000<ext>`), through the
+    * same Spark parquet `OutputWriter`, but with no Spark job when the
+    * plan is a local relation: Catalyst folds projections over a
+    * `LocalRelation` into it, so `executeCollect` only hands back rows
+    * that are already in driver memory. A write that throws deletes its
+    * partial object.
+    */
+  def writeLocal(df: DataFrame, rootDir: String, name: String): Unit = {
+    val qe = df.queryExecution
+    val session = df.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val dataSchema = DataTypeUtils.fromAttributes(qe.analyzed.output)
+    val rows = qe.executedPlan.executeCollect()
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val objectDir = new Path(rootDir, name)
+    // the session's conf on whichever thread flushes, as a task sees it
+    SQLConf.withExistingConf(session.sessionState.conf) {
+      val factory = new ParquetFileFormat()
+        .prepareWrite(session, job, Map.empty, dataSchema)
+      val task = new TaskID(new JobID("graft", 0), TaskType.MAP, 0)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(task, 0))
+      val file = s"$objectDir/part-00000-c000${factory.getFileExtension(ctx)}"
+      try {
+        val writer = factory.newInstance(file, dataSchema, ctx)
+        try rows.foreach(writer.write) finally writer.close()
+      } catch {
+        case NonFatal(e) =>
+          try objectDir.getFileSystem(job.getConfiguration)
+            .delete(objectDir, true)
+          catch { case NonFatal(d) => e.addSuppressed(d) }
+          throw e
+      }
+    }
   }
 
   /** A fresh UUID string — executors mint object names with this. */

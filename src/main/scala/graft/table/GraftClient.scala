@@ -32,8 +32,10 @@ import graft.tx._
   *     rewritten objects keep the ORIGINAL txId so they keep their
   *     chronological slot (transactions.go:11-16)
   *
-  * Scale design: log replay is metadata-only; data moves exclusively through
-  * distributed parquet jobs; `currentState` is one shuffle (window over key);
+  * Scale design: log replay is metadata-only; data moves through
+  * distributed parquet jobs, except a `writeRow` buffer, which is in
+  * driver memory already and is flushed from the driver as one object with
+  * no Spark job; `currentState` is one shuffle (window over key);
   * copy-on-write delete is a constant TWO distributed jobs (locate touched
   * objects via footer-stat-pruned scan, then one combined rewrite) no matter
   * how many objects the table has — nothing here collects table data to the
@@ -1942,20 +1944,21 @@ final class GraftClient(
     val rows = buf.map { case (idx, r) =>
       Row.fromSeq(r.toSeq :+ t.id :+ idx)
     }.toList.asJava
-    val objs = writeDirectTagged(table,
+    // the rows are in driver memory already: one object written in
+    // place, no Spark job (a CHECK violation throws while planning)
+    val name = DirectWrite.tableNamer(table)(None)
+    DirectWrite.writeLocal(
       toPhysical(
         constraintGuard(table,
-          spark.createDataFrame(rows, provSchema(schema))), schema)
-        .coalesce(1),
-      countSchema = physSchema(schema))
-    require(objs.map(_._2).sum == buf.length.toLong,
-      s"flush wrote ${objs.map(_._2).sum} rows of ${buf.length} buffered")
-    dropEmptyObjects(objs)
-    val adds = objs.collect { case (name, rowsN, stats) if rowsN > 0 =>
-      AddDataObject(table, name, t.id, rowsN, stats)
-    }
-    adds.foreach(t.actions += _)
-    afterInsertObjects(table, adds)
+          spark.createDataFrame(rows, provSchema(schema))), schema),
+      rootDir, name)
+    val (rowsN, stats) =
+      ParquetFooters.scan(spark, s"$rootDir/$name", physSchema(schema))
+    require(rowsN == buf.length.toLong,
+      s"flush wrote $rowsN rows of ${buf.length} buffered")
+    val add = AddDataObject(table, name, t.id, rowsN, stats)
+    t.actions += add
+    afterInsertObject(table, add)
     buf.clear()
   }
 

@@ -1,8 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -423,5 +430,95 @@ class GraftClientSpec extends AnyFunSuite {
       .map(r => r.getInt(0) -> r.getInt(2)).toMap
     assert(fin == model.toMap)
     c.commitTx()
+  }
+
+  /** Spark jobs started while `f` runs: the job starts the listener bus
+    * delivers between two marker jobs (it delivers in order, so once the
+    * second marker arrives every job `f` started has been seen).
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def marker(id: String): Unit = {
+      sc.setJobGroup(id, id)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-before")
+      f
+      marker("jobs-after")
+      val seen = Iterator.continually(
+        Option(groups.poll(60, TimeUnit.SECONDS))
+          .getOrElse(fail("the marker job never reached the listener")))
+        .takeWhile(_ != "jobs-after").toVector
+      seen.dropWhile(_ != "jobs-before").size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a writeRow commit runs no Spark job and writes what insert writes") {
+    val ss = spark
+    import ss.implicits._
+    val rows = (1 to 8).map(i => (s"r$i", i * 10))
+    Seq(None, Some("b > 0")).foreach { check =>
+      val dir = tmp()
+      val c = new GraftClient(spark, dir)
+      c.newTx()
+      c.createTable("buffered", xSchema)
+      c.createTable("inserted", xSchema)
+      c.commitTx()
+      check.foreach { e =>
+        c.newTx()
+        c.addConstraint("buffered", "b_pos", e)
+        c.addConstraint("inserted", "b_pos", e)
+        c.commitTx()
+      }
+      val jobs = jobsDuring {
+        c.newTx()
+        rows.foreach { case (a, b) => c.writeRow("buffered", Seq(a, b)) }
+        c.commitTx()
+      }
+      assert(jobs == 0, s"CHECK $check: the commit ran $jobs Spark jobs")
+      c.newTx()
+      c.insert("inserted", spark.createDataFrame(
+        rows.map { case (a, b) => Row(a, b) }.asJava, xSchema).coalesce(1))
+      c.commitTx()
+
+      c.newTx()
+      val Seq(buffered) = c.objects("buffered")
+      val Seq(inserted) = c.objects("inserted")
+      def parts(obj: String): Seq[String] =
+        new java.io.File(s"$dir/$obj").list()
+          .filter(_.endsWith(".parquet")).toSeq
+      assert(parts(buffered.path).size == 1 &&
+        parts(buffered.path).head.startsWith("part-00000-c000"),
+        parts(buffered.path))
+      assert(parts(buffered.path) == parts(inserted.path))
+      // same parquet schema, key-value metadata and codec as the job wrote
+      def footer(obj: String) = {
+        val file = new Path(s"$dir/$obj/${parts(obj).head}")
+        val r = ParquetFileReader.open(
+          HadoopInputFile.fromPath(file, new Configuration()))
+        try {
+          val meta = r.getFooter.getFileMetaData
+          (meta.getSchema, meta.getKeyValueMetaData.asScala.toMap,
+            r.getFooter.getBlocks.asScala
+              .flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+        } finally r.close()
+      }
+      assert(footer(buffered.path) == footer(inserted.path))
+      assert(buffered.numRows == 8 && buffered.stats == inserted.stats)
+      def read(t: String) =
+        c.scan(t).select("a", "b").as[(String, Int)].collect().toSet
+      assert(read("buffered") == rows.toSet)
+      assert(read("buffered") == read("inserted"))
+      c.rollback()
+    }
   }
 }

@@ -207,4 +207,35 @@ class HttpStoreSpec extends AnyFunSuite {
         java.nio.file.Paths.get(root, "_log_1"))) == "x")
     } finally srv.stop()
   }
+
+  test("loopback GET and LIST answer in milliseconds, not a delayed ACK") {
+    withServer { (_, s) =>
+      HttpStoreSpec.assertFastReads(s)
+    }
+  }
+}
+
+object HttpStoreSpec {
+  /** Median ms of `n` calls of `f`, after a few warm-up calls. */
+  def medianMs(n: Int)(f: => Any): Double = {
+    (1 to 5).foreach(_ => f)
+    val ms = (1 to n).map { _ =>
+      val t0 = System.nanoTime()
+      f
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    ms(n / 2)
+  }
+
+  /** The median of 50 GETs of a 600-byte object, and of 50 LISTs, must
+    * stay under 10 ms. With Nagle on, each body waited for the client's
+    * delayed ACK: 44 ms a call.
+    */
+  def assertFastReads(s: graft.store.ObjectStore): Unit = {
+    s.put("obj_600", Array.fill[Byte](600)(7))
+    val get = medianMs(50)(s.read("obj_600"))
+    val list = medianMs(50)(s.listPrefixOrdered(""))
+    assert(get < 10.0 && list < 10.0,
+      f"median GET $get%.1f ms, LIST $list%.1f ms (limit 10 ms)")
+  }
 }

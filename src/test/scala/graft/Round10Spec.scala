@@ -101,26 +101,23 @@ class Round10Spec extends AnyFunSuite {
 
   test("HttpObjectStore treats 200 on a conditional PUT as an error " +
     "(If-None-Match stripped in transit), never a win") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     // a server that IGNORES If-None-Match: answers 200 to every PUT —
-    // the behavior of an intermediary that dropped the header
-    val srv = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    srv.createContext("/o/", new HttpHandler {
-      def handle(x: HttpExchange): Unit = {
-        x.getRequestBody.readAllBytes()
-        x.sendResponseHeaders(200, -1)
-        x.close()
-      }
+    // the behavior of an intermediary that dropped the header. Made
+    // through the shared factory: the first JDK server of the JVM fixes
+    // the nodelay setting for every later one.
+    import com.sun.net.httpserver.HttpExchange
+    import graft.store.StoreHttp
+    val srv = StoreHttp.serve(0, "/o/" -> { (x: HttpExchange) =>
+      x.getRequestBody.readAllBytes()
+      StoreHttp.respond(x, 200, Array.empty)
     })
-    srv.start()
     try {
-      val s = new HttpObjectStore(s"http://127.0.0.1:${srv.getAddress.getPort}")
+      val s = new HttpObjectStore(srv.url)
       val e = intercept[java.io.IOException](
         s.putIfAbsent("_log_00000000000000000001", "x".getBytes))
       assert(e.getMessage.contains("200"),
         s"must surface the 200 ambiguity, got: ${e.getMessage}")
-    } finally srv.stop(0)
+    } finally srv.stop()
   }
 
   // ---------------------------------------------------------------- //
