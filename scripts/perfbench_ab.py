@@ -1,0 +1,151 @@
+#!/usr/bin/env python3
+"""A/B two git revisions on one perfbench workload, in alternating order.
+
+    python3 scripts/perfbench_ab.py PARENT CHANGE --workload ingest \\
+        [--seed 1] [--pairs 10] [--seconds 15] [--trace 0] \\
+        [--workdir /tmp/perfbench_ab]
+
+Run from the repository. Each revision (anything `git archive` takes: a
+commit, a branch, or `$(git stash create)` for staged, uncommitted work)
+is exported with `git archive` into its own directory under `--workdir`,
+and its first run builds it there. Pair i runs both revisions with seed
+`--seed + i`; the parent goes first in even pairs and the change first in
+odd ones, so a drift in host load falls on both sides alike.
+
+For every metric of the result line (end-to-end with `--trace 0`,
+per-layer with `--trace 1`) it prints the median (q1, q3) of each
+revision, the change/parent ratio of the medians, and in how many pairs
+the change was better, in the direction `BENCHMARK.json` declares. The
+parent's interquartile range is printed next to the difference of the
+medians: a gain is resolved only when that difference is larger. A run
+that is not `correct`, or that fails, is flagged; the script then exits 1.
+Every run's result line is also kept in `<workdir>/<workload>.results.jsonl`.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def export(rev, workdir, label):
+    """`git archive` `rev` into `workdir/label`; returns (dir, full sha)."""
+    sha = subprocess.check_output(
+        ["git", "rev-parse", "--verify", rev + "^{commit}"],
+        cwd=ROOT, text=True).strip()
+    d = os.path.join(workdir, label)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT,
+                               stdout=subprocess.PIPE)
+    subprocess.check_call(["tar", "-x", "-C", d], stdin=archive.stdout)
+    if archive.wait() != 0:
+        sys.exit(f"git archive {rev} failed")
+    return d, sha
+
+
+def run(checkout, workload, seed, seconds, trace):
+    """One perfbench run; returns its result line, or None if it failed.
+    Metric values arrive as {"value", "unit"} and are reduced to the value.
+    """
+    proc = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds),
+         "--trace", str(trace)],
+        cwd=checkout, capture_output=True, text=True)
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode != 0 or not lines:
+        sys.stderr.write(proc.stderr[-3000:])
+        return None
+    res = json.loads(lines[-1])
+    res["metrics"] = {k: v["value"] if isinstance(v, dict) else v
+                      for k, v in res["metrics"].items()}
+    return res
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawTextHelpFormatter)
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True, choices=["queries", "ingest"])
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--workdir", default="/tmp/perfbench_ab")
+    a = ap.parse_args()
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        declared = json.load(f)["per_layer" if a.trace else "end_to_end"]
+    better = {m["name"]: m["better"] for m in declared}
+
+    dirs = {}
+    for label, rev in (("parent", a.parent), ("change", a.change)):
+        dirs[label], sha = export(rev, a.workdir, label)
+        print(f"{label}: {rev} = {sha[:12]} in {dirs[label]}", flush=True)
+
+    results = {"parent": [], "change": []}
+    flagged = []
+    log = open(os.path.join(a.workdir, f"{a.workload}.results.jsonl"), "w")
+    for i in range(a.pairs):
+        seed = a.seed + i
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for label in order:
+            r = run(dirs[label], a.workload, seed, a.seconds, a.trace)
+            ok = r is not None and r["correct"] and r["failed"] == 0
+            if not ok:
+                flagged.append(f"{label} seed {seed}: " + (
+                    "run failed" if r is None else
+                    f"correct={r['correct']} failed={r['failed']}"))
+            results[label].append(r["metrics"] if r is not None else None)
+            log.write(json.dumps({"rev": label, "seed": seed,
+                                  "result": r}) + "\n")
+            log.flush()
+            print(f"pair {i + 1}/{a.pairs} seed {seed} {label}: " +
+                  ("FAILED" if r is None else
+                   " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()
+                            if k in ("op_p50_ms", "op_tail_ms", "wall_s"))) +
+                  ("" if ok else "  <-- NOT CORRECT"), flush=True)
+
+    pairs = [(p, c) for p, c in zip(results["parent"], results["change"])
+             if p is not None and c is not None]
+    print(f"\n{a.workload}, {len(pairs)} pairs, seeds {a.seed}.."
+          f"{a.seed + a.pairs - 1}, {a.seconds:g} s runs, "
+          f"trace {a.trace}: median (q1, q3)")
+    print(f"{'metric':32} {'parent':>28} {'change':>28} {'ratio':>6} "
+          f"{'wins':>5} {'|diff|':>9} {'par IQR':>9}")
+    for name in better:
+        ps = [p[name] for p, _ in pairs if p.get(name) is not None]
+        cs = [c[name] for _, c in pairs if c.get(name) is not None]
+        if not ps or not cs:
+            continue
+        p1, pm, p3 = quartiles(sorted(ps))
+        c1, cm, c3 = quartiles(sorted(cs))
+        sign = 1 if better[name] == "higher" else -1
+        wins = sum(1 for p, c in pairs
+                   if p.get(name) is not None and c.get(name) is not None
+                   and sign * (c[name] - p[name]) > 0)
+        ratio = f"{cm / pm:.3f}" if pm else "-"
+        print(f"{name:32} {f'{pm:.4g} ({p1:.4g}, {p3:.4g})':>28} "
+              f"{f'{cm:.4g} ({c1:.4g}, {c3:.4g})':>28} {ratio:>6} "
+              f"{f'{wins}/{len(pairs)}':>5} {abs(cm - pm):>9.4g} "
+              f"{p3 - p1:>9.4g}")
+    if flagged:
+        print("\nruns not correct:\n  " + "\n  ".join(flagged))
+        sys.exit(1)
+
+
+if __name__ == "__main__":
+    main()

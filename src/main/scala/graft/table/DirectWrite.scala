@@ -5,6 +5,7 @@ import java.util.UUID
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobContext, JobID, TaskAttemptContext,
   TaskAttemptID, TaskID, TaskType}
@@ -199,16 +200,19 @@ private[graft] object DirectWrite {
     * same Spark parquet `OutputWriter`, but with no Spark job when the
     * plan is a local relation: Catalyst folds projections over a
     * `LocalRelation` into it, so `executeCollect` only hands back rows
-    * that are already in driver memory. A write that throws deletes its
-    * partial object.
+    * that are already in driver memory. `hadoopConf` is the session's
+    * Hadoop conf (`newHadoopConf()`), which the caller can reuse for the
+    * object's footer scan; the write takes its own job copy of it. A
+    * write that throws deletes its partial object.
     */
-  def writeLocal(df: DataFrame, rootDir: String, name: String): Unit = {
+  def writeLocal(df: DataFrame, rootDir: String, name: String,
+      hadoopConf: Configuration): Unit = {
     val qe = df.queryExecution
     val session = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val dataSchema = DataTypeUtils.fromAttributes(qe.analyzed.output)
     val rows = qe.executedPlan.executeCollect()
-    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val job = Job.getInstance(hadoopConf)
     val objectDir = new Path(rootDir, name)
     // the session's conf on whichever thread flushes, as a task sees it
     SQLConf.withExistingConf(session.sessionState.conf) {

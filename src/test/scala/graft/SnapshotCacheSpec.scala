@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,20 +22,36 @@ import graft.tx.TxLog
 class SnapshotCacheSpec extends AnyFunSuite {
   private def spark = SparkTestSession.spark
 
-  /** Local store that counts whole-object log reads; SAME cacheKey as
-    * the wrapped store so the cache engages.
+  /** Local store that counts whole-object log reads (in total and per
+    * entry) and log listings (full and ranged, with the ranged listing's
+    * start key); SAME cacheKey as the wrapped store so the cache engages.
     */
   private class CountingStore(root: String) extends ObjectStore {
     private val under = new LocalObjectStore(root)
     val logReads = new AtomicInteger(0)
+    val readsOf = new ConcurrentHashMap[String, AtomicInteger]()
+    val fullLogLists = new AtomicInteger(0)
+    val rangedLogLists = new ConcurrentLinkedQueue[String]()
+    def reset(): Unit = {
+      logReads.set(0); readsOf.clear(); fullLogLists.set(0)
+      rangedLogLists.clear()
+    }
     override def putIfAbsent(name: String, data: Array[Byte]): Boolean =
       under.putIfAbsent(name, data)
-    override def listPrefixOrdered(prefix: String): Seq[String] =
+    override def listPrefixOrdered(prefix: String): Seq[String] = {
+      if (prefix == TxLog.LogPrefix) fullLogLists.incrementAndGet()
       under.listPrefixOrdered(prefix)
-    override def listPrefixAfter(prefix: String, after: String): Seq[String] =
+    }
+    override def listPrefixAfter(prefix: String, after: String): Seq[String] = {
+      if (prefix == TxLog.LogPrefix) rangedLogLists.add(after)
       under.listPrefixAfter(prefix, after)
+    }
     override def read(name: String): Array[Byte] = {
-      if (name.startsWith(TxLog.LogPrefix)) logReads.incrementAndGet()
+      if (name.startsWith(TxLog.LogPrefix)) {
+        logReads.incrementAndGet()
+        readsOf.computeIfAbsent(name, _ => new AtomicInteger(0))
+          .incrementAndGet()
+      }
       under.read(name)
     }
     override def put(name: String, data: Array[Byte]): Unit =
@@ -130,5 +149,55 @@ class SnapshotCacheSpec extends AnyFunSuite {
     c.newTx()
     assert(c.scan("t").count() == 4)
     c.rollback()
+  }
+
+  test("a losing commitTxRetrying rebases with ranged listings only") {
+    val ss = spark
+    import ss.implicits._
+    val root = Files.createTempDirectory("graft_snapcache4").toString
+    val store = new CountingStore(root)
+    val c = new GraftClient(spark, root, checkpointInterval = 0,
+      logStore = Some(store))
+    c.newTx()
+    c.createTable("t", Seq((1, "a")).toDF("k", "v").schema)
+    c.commitTx()
+    (0 until 3).foreach { i =>
+      c.newTx(); c.insert("t", Seq((i, "a")).toDF("k", "v")); c.commitTx()
+    }
+    c.newTx()
+    c.writeRow("t", Seq(10, "ours"))
+    // a peer takes the slot our snapshot would commit at, through an
+    // uncacheable store so our cached snapshot does not see it
+    val peer = new GraftClient(spark, root, checkpointInterval = 0,
+      logStore = Some(new CountingStore(root) {
+        override def cacheKey: Option[String] = None
+      }))
+    peer.newTx(); peer.insert("t", Seq((20, "peer")).toDF("k", "v"))
+    peer.commitTx()
+    val lost = TxLog.logName(4)
+    assert(store.listPrefixOrdered(TxLog.LogPrefix).last == lost)
+
+    store.reset()
+    c.commitTxRetrying()
+    assert(store.fullLogLists.get() == 0,
+      s"the rebase listed the whole log ${store.fullLogLists.get()} times")
+    // begin()'s roll-forward tail, then the conflict window [4, 5)
+    assert(store.rangedLogLists.asScala.toSeq ==
+      Seq(TxLog.logName(2), TxLog.logName(3)))
+    val reads = store.readsOf.asScala.map { case (n, k) => n -> k.get() }
+    assert(reads == Map(lost -> 2),
+      s"only the peer's entry is read, once a listing: $reads")
+    assert(c.latestVersion == 6)
+    c.newTx()
+    assert(c.scan("t").count() == 5)
+    c.rollback()
+
+    // a window read outside a commit: one ranged listing, its bodies
+    store.reset()
+    val window = new TxLog(store).entriesBetween(1, 4)
+    assert(window.map(_._1) == Seq(1L, 2L, 3L))
+    assert(store.fullLogLists.get() == 0 &&
+      store.rangedLogLists.asScala.toSeq == Seq(TxLog.logName(0)))
+    assert(store.logReads.get() == 3)
   }
 }
