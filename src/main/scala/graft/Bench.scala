@@ -69,10 +69,20 @@ object Bench {
     // two adjacent samples of one query are both poisoned while samples a
     // full pass apart rarely are (r3 recorded 56s on a 2s query — min-of-2
     // adjacent runs — during a contended driver run)
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A query that throws records no time: its time-to-failure would
+    // read as a fast run.
+    def time(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"bench: $name failed: $e")
+          None
+      }
     }
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (the sf1 scale probe
     // times only the heavy hitters); SPARK_GRAFT_PASSES overrides the
@@ -83,10 +93,13 @@ object Bench {
       .getOrElse(SparkEntry.queries)
     val nPasses = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
     val passes = Seq.fill(nPasses) {
-      selected.map { case (name, fn) => name -> time(fn) }
+      selected.map { case (name, fn) => name -> time(name, fn) }
     }
-    val results = selected.keys.map { name =>
-      name -> passes.map(_(name)).min
+    // failed in any pass: listed under "failed", left out of the total
+    val failed = selected.keys.filter(n => passes.exists(_(n).isEmpty))
+      .toSeq.sorted
+    val results = selected.keys.filterNot(failed.contains).map { name =>
+      name -> passes.map(_(name).get).min
     }.toSeq
     // The stdout line must fit the driver's 2000-char stdout-tail capture
     // (r3 came back parsed:null because an unrounded ~2800-char line lost
@@ -98,19 +111,24 @@ object Bench {
     // records every query at 3 decimals.
     val total = results.map(_._2).sum
     val sfTag = sfDir.split('/').last
-    def lineFor(rs: Seq[(String, Double)]): String = {
+    def lineFor(rs: Seq[(String, Double)], fs: Seq[String]): String = {
       val qs = rs.map { case (k, v) => "\"" + k + "\":" + "%.3f".format(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${"%.1f".format(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"sf":"$sfTag"}"""
+      val fl = fs.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${"%.1f".format(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"failed":$fl,"sf":"$sfTag"}"""
     }
     val bySlowest = results.sortBy(-_._2)
     // budget 1980: build.sbt suppresses sbt's trailing "[success]" line
     // (showSuccess := false), so this JSON line plus its newline is the
-    // last stdout inside the 2000-char tail; 20 chars of slack
-    val line = (results.size to 1 by -1).view
-      .map(n => lineFor(bySlowest.take(n)))
+    // last stdout inside the 2000-char tail; 20 chars of slack. Failed
+    // names outrank timings: per-query times are dropped first, then
+    // (only if even the bare line overflows) the tail of the failed list
+    val line = (for {
+      f <- (failed.size to 0 by -1).view
+      n <- (results.size to 0 by -1).view
+    } yield lineFor(bySlowest.take(n), failed.take(f)))
       .find(_.length <= 1980)
-      .getOrElse(lineFor(bySlowest.take(1)))
+      .getOrElse(lineFor(Nil, Nil))
     // full-precision record of every query; failures reported (a silent
     // catch here cost a round of per-query history when the path
     // assumption broke). TWO artifacts per run: the fixed path (the
@@ -119,7 +137,8 @@ object Bench {
     // 13's 81.6 s record pass lost its per-query detail because the next
     // pass overwrote the one fixed path before capture. Min-of-N
     // workflows cite the stamped file of whichever run won.
-    val detail = (lineFor(results.sortBy(_._1)) + "\n").getBytes("UTF-8")
+    val detail = (lineFor(results.sortBy(_._1), failed) + "\n")
+      .getBytes("UTF-8")
     val stamp = java.time.format.DateTimeFormatter
       .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())

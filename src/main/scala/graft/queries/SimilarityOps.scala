@@ -802,8 +802,10 @@ object SimilarityOps {
     // A/B-measured HERE and kept for the parquet-backed sim_ann_ivf /
     // sim_ann_filtered, but REGRESSED this graft-scan path 25-45 %
     // (0.58→0.77 s table, 1.34→2.04 s stream) — the shuffled join
-    // pipelines better with the DSv2 scan — so this path keeps its
-    // original shape.
+    // pipelined better with the scan — so this path keeps its original
+    // shape. That A/B ran when format("graft") planned a DSv1 row scan;
+    // the read is now the catalog's DSv2 GraftBatchScan (columnar,
+    // runtime-filterable) and the A/B has not been repeated.
     val cand = spark.read.format("graft").option("table", "emb").load(root)
       .filter(col("cell").isin(cells.toIndexedSeq: _*))
       .select(col("vec_id"), col("v"), col("cell").as("cid"))

@@ -1,17 +1,23 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.StreamingShim
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sql.GraftTable
 import graft.table.GraftClient
-import graft.tx.ColStats
 
 /** The Spark DataSource surface of the engine — `format("graft")` for both
   * batch and streaming reads of transactional tables, registered via
@@ -25,15 +31,18 @@ import graft.tx.ColStats
   *   spark.readStream.format("graft")
   *     .option("table", "events").load(storeRoot)        // micro-batch
   *
-  * Batch reads are a [[PrunedFilteredScan]]: Spark pushes the compiled
-  * filter conjuncts down, the relation turns range-shaped conjuncts into
-  * per-column bounds for [[GraftClient.scanBounded]]'s stats-based FILE
-  * SKIPPING (objects whose footer min/max cannot match are never opened
-  * — at 100 TB this is the difference between a partition-pruned read and
-  * a full-table scan), applies the translatable filters inside the scan so
-  * they reach the parquet reader as row-group pushdown, and declares every
-  * filter unhandled so Spark re-applies exact semantics on top (file
-  * skipping is best-effort pruning, never a correctness dependency).
+  * Batch reads of an existing table are DataSource V2: as a
+  * [[TableProvider]], [[getTable]] returns the SQL catalog's
+  * [[graft.sql.GraftTable]] (the time-travel options resolved to its
+  * `asOf`), so `format("graft")` and SQL plan the same
+  * [[graft.sql.GraftBatchScan]] — stats/bloom/IN/IS NULL file skipping,
+  * parquet pushdown, columnar batches, runtime filtering, log-answered
+  * COUNT/MIN/MAX and CBO statistics, with every filter re-applied by
+  * Spark above the scan. For the batch change feed, a read of a missing
+  * table, every batch write and every stream, [[getTable]] returns a
+  * table with no capabilities and Spark falls back to the V1 provider
+  * methods below (Delta's `DeltaDataSource` keeps its V1 paths the same
+  * way).
   *
   * Streaming reads treat the transaction log as the offset log: offset v
   * = "all commits with id < v", so each micro-batch is exactly the
@@ -43,7 +52,7 @@ import graft.tx.ColStats
   * fails the stream unless `ignoreChanges=true` opts into at-least-once
   * replay. The reference has no streaming surface at all (SURVEY.md §2.2).
   */
-final class GraftSource extends RelationProvider
+final class GraftSource extends TableProvider with RelationProvider
     with CreatableRelationProvider with StreamSourceProvider
     with StreamSinkProvider with DataSourceRegister {
 
@@ -52,6 +61,36 @@ final class GraftSource extends RelationProvider
   private def opt(parameters: Map[String, String], key: String): String =
     parameters.getOrElse(key, throw new IllegalArgumentException(
       s"graft source: option '$key' is required"))
+
+  /** Empty, as Delta's: [[getTable]] reads the schema from the same
+    * snapshot as the rest of the table, so no second log replay.
+    */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new StructType()
+
+  /** A plain or time-travel batch read of an existing table → the
+    * catalog's [[GraftTable]]. `timestampAsOf` (Delta parity) is epoch
+    * millis or an ISO-8601 instant/date-time, resolved to the greatest
+    * version whose commit ts is at-or-before it — metadata-only. Anything
+    * else → [[GraftSource.V1Only]].
+    */
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table = {
+    val parameters = CaseInsensitiveMap(properties.asScala.toMap)
+    (parameters.get("path"), parameters.get("table")) match {
+      case (Some(root), Some(table)) if !changeFeed(parameters) =>
+        val byVersion = parameters.get("versionAsOf").map(_.toLong)
+        val byTs = parameters.get("timestampAsOf").map { raw =>
+          new GraftClient(SparkSession.active, root)
+            .versionAt(GraftSource.parseTimestampMillis(raw))
+        }
+        require(byVersion.isEmpty || byTs.isEmpty,
+          "graft: versionAsOf and timestampAsOf are mutually exclusive")
+        GraftTable.load(root, table, byVersion.orElse(byTs))
+          .getOrElse(GraftSource.V1Only)
+      case _ => GraftSource.V1Only
+    }
+  }
 
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation =
@@ -68,21 +107,15 @@ final class GraftSource extends RelationProvider
           .orElse(parameters.get("endingVersion")).map(_.toLong),
         preimages(parameters))
     else {
-      val byVersion = parameters.get("versionasof")
-        .orElse(parameters.get("versionAsOf")).map(_.toLong)
-      // timestampAsOf (Delta-parity): epoch millis or an ISO-8601
-      // instant/date-time, resolved to the greatest version whose
-      // commit ts is at-or-before it — metadata-only resolution
-      val byTs = parameters.get("timestampasof")
-        .orElse(parameters.get("timestampAsOf")).map { raw =>
-          val millis = GraftSource.parseTimestampMillis(raw)
-          GraftRelation.withClient(sqlContext,
-            opt(parameters, "path"))(_.versionAt(millis))
-        }
-      require(byVersion.isEmpty || byTs.isEmpty,
-        "graft: versionAsOf and timestampAsOf are mutually exclusive")
-      GraftRelation(sqlContext, opt(parameters, "path"),
-        opt(parameters, "table"), byVersion.orElse(byTs))
+      // any other read of an existing table plans through getTable's
+      // GraftTable; this one found no table (or no path/table option),
+      // and the client's lookup reports that
+      val table = opt(parameters, "table")
+      GraftSource.withClient(sqlContext, opt(parameters, "path"))(
+        _.schemaOf(table))
+      throw new IllegalStateException(
+        s"graft: table $table was created while this read was planned; " +
+          "run the read again")
     }
 
   /** `df.write.format("graft").mode(...)` — one transactional commit per
@@ -138,7 +171,24 @@ final class GraftSource extends RelationProvider
           c.commitTxRetrying()
         }
     }
-    GraftRelation(sqlContext, root, table, None)
+    // re-cache DataFrames cached over a plain format("graft") read of
+    // this table (options path and table only), so they see the write
+    val session = sqlContext.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (!session.sharedState.cacheManager.isEmpty)
+      GraftTable.load(root, table, None).foreach { t =>
+        session.sharedState.cacheManager.recacheByPlan(session,
+          DataSourceV2Relation.create(t, None, None,
+            new CaseInsensitiveStringMap(
+              Map("path" -> root, "table" -> table).asJava)))
+      }
+    // Spark only reads the returned relation's schema; the table is read
+    // back through getTable
+    val ctx = sqlContext
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = data.schema
+    }
   }
 
   private def preimages(parameters: Map[String, String]): Boolean =
@@ -205,7 +255,7 @@ final class GraftSource extends RelationProvider
     // table schema; the feed columns re-decorate below).
     val base = trackLoc(parameters)
       .flatMap(l => GraftStreamSource.readTracked(sqlContext, l))
-      .getOrElse(GraftRelation.withClient(sqlContext,
+      .getOrElse(GraftSource.withClient(sqlContext,
         opt(parameters, "path"))(_.schemaOf(opt(parameters, "table"))))
     (shortName(),
       if (changeFeed(parameters) && keyColumnsOpt(parameters).isEmpty)
@@ -281,6 +331,24 @@ final class GraftSource extends RelationProvider
 }
 
 private[graft] object GraftSource {
+  /** What [[GraftSource.getTable]] returns for everything the DSv2
+    * [[GraftTable]] does not serve: with no capabilities, Spark plans the
+    * read, write or stream through the V1 provider methods.
+    */
+  object V1Only extends Table {
+    override def name(): String = "graft (V1)"
+    override def schema(): StructType = new StructType()
+    override def capabilities(): java.util.Set[TableCapability] =
+      java.util.Collections.emptySet()
+  }
+
+  private[sources] def withClient[A](sqlContext: SQLContext, root: String)(
+      f: GraftClient => A): A = {
+    val c = new GraftClient(sqlContext.sparkSession, root)
+    c.newTx()
+    try f(c) finally c.rollback() // result DataFrames stay valid: immutable files
+  }
+
   /** Where a FRESH stream (no checkpointed offset yet) starts: a pinned
     * log version, a wall-clock instant (resolved via
     * versionAfterTimestamp at first use), or LATEST — "changes from now
@@ -718,226 +786,6 @@ final class GraftSink(sqlContext: SQLContext, root: String, table: String,
   override def toString: String = s"GraftSink[$table:$mode]"
 }
 
-object GraftRelation {
-  /** Number of data objects the most recent [[GraftRelation.buildScan]]
-    * opened after stats pruning — a test observation point (the pruning
-    * happens inside buildScan, invisible to `DataFrame.inputFiles`).
-    */
-  @volatile private[graft] var lastScanObjectCount: Int = -1
-
-  /** Range-shaped conjuncts → inclusive per-column prune bounds for
-    * [[GraftClient.scanPruned]]. Only shapes whose violation PROVES no
-    * row in an object can match are eligible; everything else simply
-    * doesn't prune. Shared by this V1 connector and the SQL catalog's
-    * scan builder ([[graft.sql.GraftScanBuilder]]).
-    */
-  private[graft] def boundsOf(f: Filter): Seq[(String, (Any, Any))] = f match {
-    case EqualTo(a, v) => Seq(a -> (v, v))
-    // a <=> v with v non-null matches exactly the rows a = v does
-    // (null <=> v is false), so it prunes identically; the v = null
-    // form is the IS NULL tier's ([[isNullOf]])
-    case EqualNullSafe(a, v) if v != null => Seq(a -> (v, v))
-    case GreaterThan(a, v) => Seq(a -> (v, null))
-    case GreaterThanOrEqual(a, v) => Seq(a -> (v, null))
-    case LessThan(a, v) => Seq(a -> (null, v))
-    case LessThanOrEqual(a, v) => Seq(a -> (null, v))
-    case In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-      // bound by the value span; exactness comes from Spark's re-apply
-      val norm = vs.map(ColStats.normalize)
-      if (norm.forall(_.isInstanceOf[Long]))
-        Seq(a -> (norm.map(_.asInstanceOf[Long]).min,
-          norm.map(_.asInstanceOf[Long]).max))
-      else if (norm.forall(v => v.isInstanceOf[Long] || v.isInstanceOf[Double]))
-        Seq(a -> (norm.map(toD).min, norm.map(toD).max))
-      else if (norm.forall(_.isInstanceOf[String]))
-        Seq(a -> (norm.map(_.asInstanceOf[String]).min,
-          norm.map(_.asInstanceOf[String]).max))
-      else Nil
-    case StringStartsWith(a, v) if v.nonEmpty =>
-      // LIKE 'p%' prunes through the string min/max: rows match only in
-      // [p, prefixUpperBound(p)] (null upper = unbounded). Parquet's
-      // truncated string stats are conservative the same way, so the
-      // bound never false-prunes.
-      Seq(a -> (v, ColStats.prefixUpperBound(v)))
-    case And(l, r) => boundsOf(l) ++ boundsOf(r)
-    case _ => Nil
-  }
-
-  /** Equality conjuncts → bloom-probe candidates (stats bounds come from
-    * [[boundsOf]]; [[graft.table.GraftClient.scanPruned]] applies both
-    * tiers).
-    */
-  private[graft] def eqOf(f: Filter): Seq[(String, Any)] = f match {
-    case EqualTo(a, v) if v != null => Seq(a -> v)
-    case EqualNullSafe(a, v) if v != null => Seq(a -> v) // see boundsOf
-    case And(l, r) => eqOf(l) ++ eqOf(r)
-    case _ => Nil
-  }
-
-  /** IN-shaped conjuncts → per-value disjunctive prune lists: an object
-    * survives only if at least one listed value passes its stats AND
-    * bloom, so a scattered IN opens the matching objects, not the whole
-    * value span ([[boundsOf]] still emits the span — both are applied,
-    * the tighter wins). NO length cap: lists at or under
-    * [[graft.table.GraftClient.InListNarrowCap]] take the bounded
-    * probe-hash-job path, wider ones the driver-side
-    * [[graft.table.WideProbeIndex]] probe (O(log objects + hits) per
-    * value) — a 1,000-value point-set query opens the matched objects
-    * either way, never the [min,max] span.
-    */
-  private[graft] def inOf(f: Filter): Seq[(String, Seq[Any])] = f match {
-    case In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-      Seq(a -> vs.toSeq)
-    case And(l, r) => inOf(l) ++ inOf(r)
-    // Catalyst pushes `k = 5 OR k = 900` as Or(EqualTo, EqualTo) — it
-    // has no or-to-IN rewrite — so without this fold the disjunction
-    // pruned NOTHING (boundsOf skips Or too). A same-column OR of
-    // point shapes IS an IN list; mixed columns stay unprunable.
-    case or: Or => pointSet(or).toSeq
-    case _ => Nil
-  }
-
-  /** A filter that holds only when ONE column takes a value from a
-    * finite set: EqualTo / IN / same-column ORs of those, recursively.
-    */
-  private def pointSet(f: Filter): Option[(String, Seq[Any])] = f match {
-    case EqualTo(a, v) if v != null => Some(a -> Seq(v))
-    case In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-      Some(a -> vs.toSeq)
-    case Or(l, r) => (pointSet(l), pointSet(r)) match {
-      case (Some((c1, v1)), Some((c2, v2))) if c1 == c2 =>
-        Some((c1, v1 ++ v2))
-      case _ => None
-    }
-    case _ => None
-  }
-
-  /** Conjuncts probing a column for NULL (`IS NULL`, `<=> NULL`): an
-    * object whose footer stats say ZERO nulls for the column can be
-    * skipped — at 100 TB a "find rows missing this field" audit opens
-    * only the objects that actually hold nulls. Strictly conservative:
-    * objects without a null count (no stats entry — including pre-add
-    * schema-evolution objects, whose physical absence READS as null)
-    * are kept.
-    */
-  private[graft] def isNullOf(f: Filter): Seq[String] = f match {
-    case IsNull(a) => Seq(a)
-    case EqualNullSafe(a, null) => Seq(a)
-    case And(l, r) => isNullOf(l) ++ isNullOf(r)
-    case _ => Nil
-  }
-
-  private def toD(v: Any): Double = v match {
-    case l: Long => l.toDouble
-    case d: Double => d
-    case other => sys.error(s"unexpected: $other")
-  }
-
-  private[sources] def withClient[A](sqlContext: SQLContext, root: String)(
-      f: GraftClient => A): A = {
-    val c = new GraftClient(sqlContext.sparkSession, root)
-    c.newTx()
-    try f(c) finally c.rollback() // result DataFrames stay valid: immutable files
-  }
-}
-
-final case class GraftRelation(sqlContext: SQLContext, root: String,
-    table: String, asOf: Option[Long]) extends BaseRelation
-    with PrunedFilteredScan {
-
-  import GraftRelation.withClient
-
-  override val schema: StructType = asOf match {
-    case Some(v) => withClient(sqlContext, root)(_.schemaAsOf(table, v))
-    case None => withClient(sqlContext, root)(_.schemaOf(table))
-  }
-
-  /** Join-planning statistics: the sum of the live objects' on-disk bytes
-    * (driver-side metadata walk, no job). Without this every graft table
-    * reports the conf default (8 PiB) and can never be broadcast.
-    */
-  override def sizeInBytes: Long = withClient(sqlContext, root) { c =>
-    // Hadoop FS, not java.io: the root may be on a remote scheme
-    val conf = sqlContext.sparkSession.sessionState.newHadoopConf()
-    c.objects(table).map { a =>
-      // external (converted-in-place) objects carry absolute paths
-      val p = new org.apache.hadoop.fs.Path(
-        if (a.path.startsWith("/")) a.path else s"$root/${a.path}")
-      try {
-        val fs = p.getFileSystem(conf)
-        // ONE remote RPC per object, not getFileStatus + listStatus:
-        // listStatus on a file returns its own status, on a directory
-        // its children — a planning-time path priced per live object
-        fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-      } catch { case _: java.io.FileNotFoundException => 0L }
-    }.sum.max(1L)
-  }
-
-  /** Every filter is re-applied by Spark: pruning + in-scan filtering here
-    * are performance tiers, not semantic guarantees.
-    */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    val base = asOf match {
-      case Some(v) => withClient(sqlContext, root) { c =>
-        GraftRelation.lastScanObjectCount = -1
-        c.scanAsOf(table, v)
-      }
-      case None => withClient(sqlContext, root) { c =>
-        val bounds = filters.toSeq.flatMap(boundsOf)
-        val equalities = filters.toSeq.flatMap(eqOf)
-        val inLists = filters.toSeq.flatMap(GraftRelation.inOf)
-        val isNulls = filters.toSeq.flatMap(GraftRelation.isNullOf)
-        GraftRelation.lastScanObjectCount =
-          c.prunedObjects(table, bounds, equalities, inLists, isNulls).length
-        c.scanPruned(table, bounds, equalities, inLists, isNulls)
-      }
-    }
-    val filtered = filters.flatMap(toColumn).reduceOption(_ && _)
-      .fold(base)(base.filter)
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.map(col).toIndexedSeq: _*)
-    projected.rdd
-  }
-
-  private def boundsOf(f: Filter): Seq[(String, (Any, Any))] =
-    GraftRelation.boundsOf(f)
-
-  private def eqOf(f: Filter): Seq[(String, Any)] =
-    GraftRelation.eqOf(f)
-
-  /** sources.Filter → Catalyst predicate, for the translatable shapes —
-    * applied INSIDE the scan so parquet row-group stats and pushdown see
-    * them. Untranslatable shapes are skipped (Spark re-applies them).
-    */
-  private def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case StringContains(a, v) => Some(col(a).contains(v))
-    case Not(c) => toColumn(c).map(!_)
-    case And(l, r) =>
-      (toColumn(l), toColumn(r)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (a, b) => a.orElse(b) // partial AND is still a valid narrowing
-      }
-    case Or(l, r) =>
-      for { a <- toColumn(l); b <- toColumn(r) } yield a || b
-    case _ => None
-  }
-}
-
 /** BATCH change-data-feed relation — `spark.read.format("graft")
   * .option("changeFeed", "true").option("keyColumns", "id")
   * .option("startingVersion", v1).option("endingVersion", v2)
@@ -955,7 +803,7 @@ final case class GraftChangesRelation(sqlContext: SQLContext, root: String,
     extends BaseRelation with TableScan {
 
   private def changes: DataFrame =
-    GraftRelation.withClient(sqlContext, root) { c =>
+    GraftSource.withClient(sqlContext, root) { c =>
       if (keyCols.isEmpty)
         // file-level per-commit records (Delta's cdc actions) — no row
         // identity needed; preimages is meaningless here (updates are
@@ -1106,12 +954,12 @@ private[sources] object GraftStreamSource {
       case Some(l) =>
         readTracked(sqlContext, l).getOrElse {
           val s =
-            GraftRelation.withClient(sqlContext, root)(_.schemaOf(table))
+            GraftSource.withClient(sqlContext, root)(_.schemaOf(table))
           writeTracked(sqlContext, l, s)
           s
         }
       case None =>
-        GraftRelation.withClient(sqlContext, root)(_.schemaOf(table))
+        GraftSource.withClient(sqlContext, root)(_.schemaOf(table))
     }
 
   /** One evolution policy for every stream shape's getBatch. Without a

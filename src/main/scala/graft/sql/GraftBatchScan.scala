@@ -17,7 +17,6 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.sources.GraftRelation
 import graft.table.GraftClient
 import graft.tx.AddDataObject
 
@@ -249,10 +248,10 @@ final class GraftBatchScan(private val table: GraftTable,
 
   private def prunedFiles(c: GraftClient): Vector[AddDataObject] =
     c.prunedObjects(table.tableName,
-      pushed.toSeq.flatMap(GraftRelation.boundsOf),
-      pushed.toSeq.flatMap(GraftRelation.eqOf),
-      pushed.toSeq.flatMap(GraftRelation.inOf),
-      pushed.toSeq.flatMap(GraftRelation.isNullOf))
+      pushed.toSeq.flatMap(FilterTranslation.boundsOf),
+      pushed.toSeq.flatMap(FilterTranslation.eqOf),
+      pushed.toSeq.flatMap(FilterTranslation.inOf),
+      pushed.toSeq.flatMap(FilterTranslation.isNullOf))
 
   /** Build (or reuse, keyed on the runtime-filter state) the scan's
     * physical RDD. Spark may plan once before runtime filters arrive

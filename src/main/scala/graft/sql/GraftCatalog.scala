@@ -16,8 +16,8 @@ import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.GraftRelation
 import graft.table.GraftClient
+import graft.tx.ColStats
 
 /** DataSourceV2 `TableCatalog` over a graft table store — the SQL surface
   * the reference never had (its whole API is the Go client,
@@ -91,20 +91,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       try c.tables.contains(ident.name()) finally c.rollback()
     }
 
-  override def loadTable(ident: Identifier): Table = {
-    val t = tableName(ident)
-    // schema AND properties from ONE snapshot: properties() is then a
-    // field read per call, not a fresh log replay (DESCRIBE and every
-    // plan touch it)
-    val (schema, props) = withClient { c =>
-      c.newTx()
-      try {
-        if (!c.tables.contains(t)) throw new NoSuchTableException(ident)
-        (c.schemaOf(t), c.tablePropertiesOf(t))
-      } finally c.rollback()
-    }
-    new GraftTable(root, t, schema, tableProps = props)
-  }
+  override def loadTable(ident: Identifier): Table =
+    GraftTable.load(root, tableName(ident), None)
+      .getOrElse(throw new NoSuchTableException(ident))
 
   /** `SELECT … FROM cat.t VERSION AS OF v` — same convention as the
     * connector's `versionAsOf` option: v is the log version (state after
@@ -118,13 +107,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"graft VERSION AS OF takes a log version (long), got '$version'")
       }
-    val schema = withClient { c =>
-      try c.schemaAsOf(t, v)
-      catch {
-        case _: IllegalArgumentException => throw new NoSuchTableException(ident)
-      }
-    }
-    new GraftTable(root, t, schema, asOf = Some(v))
+    loadAsOf(ident, t, v)
   }
 
   /** `SELECT … FROM cat.t TIMESTAMP AS OF ts` — Spark hands micros since
@@ -133,15 +116,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val t = tableName(ident)
-    val (v, schema) = withClient { c =>
-      val v = c.versionAt(timestamp / 1000L)
-      try (v, c.schemaAsOf(t, v))
-      catch {
-        case _: IllegalArgumentException => throw new NoSuchTableException(ident)
-      }
-    }
-    new GraftTable(root, t, schema, asOf = Some(v))
+    loadAsOf(ident, t, withClient(_.versionAt(timestamp / 1000L)))
   }
+
+  private def loadAsOf(ident: Identifier, t: String, v: Long): Table =
+    try GraftTable.load(root, t, Some(v)).get
+    catch {
+      case _: IllegalArgumentException => throw new NoSuchTableException(ident)
+    }
 
   /** `PARTITIONED BY (a, b, ...)` — identity transforms only: each
     * partition column is marked in its field METADATA with its ordinal
@@ -466,10 +448,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftCatalog {
-  /** Number of data objects the most recent catalog [[GraftScanBuilder]]
-    * scan opened after stats/bloom pruning (-1 for time-traveled reads,
-    * which scan their full historical live set) — a test observation
-    * point, mirroring [[graft.sources.GraftRelation.lastScanObjectCount]].
+  /** Number of data objects the most recent [[GraftBatchScan]] opened
+    * after stats/bloom/runtime pruning (-1 for time-traveled reads, which
+    * scan their full historical live set) — a test observation point for
+    * every batch read, SQL and `format("graft")` alike.
     */
   @volatile private[graft] var lastScanObjectCount: Int = -1
 
@@ -499,6 +481,31 @@ object GraftTable {
     * created before multi-column support ⇒ 0, the only column).
     */
   val PartitionOrdKey = GraftClient.PartitionOrdKey
+
+  /** The table `name` under `root` as the DSv2 planner sees it — the one
+    * loader behind the catalog's three `loadTable` overloads and
+    * `format("graft")` batch reads. Latest: schema and properties from
+    * ONE snapshot (properties() is then a field read per call, not a
+    * fresh log replay — DESCRIBE and every plan touch it), None when the
+    * snapshot has no such table. `asOf = Some(v)`: the schema at log
+    * version v, read-only; a table absent at v throws the client's
+    * `no such table at v…` error.
+    */
+  def load(root: String, name: String,
+      asOf: Option[Long]): Option[GraftTable] = {
+    val c = new GraftClient(SparkSession.active, root)
+    asOf match {
+      case Some(v) =>
+        Some(new GraftTable(root, name, c.schemaAsOf(name, v), asOf))
+      case None =>
+        c.newTx()
+        try
+          if (!c.tables.contains(name)) None
+          else Some(new GraftTable(root, name, c.schemaOf(name),
+            tableProps = c.tablePropertiesOf(name)))
+        finally c.rollback()
+    }
+  }
 }
 
 /** A graft table as seen by Spark's DSv2 planner. Reads and the DELETE
@@ -535,6 +542,17 @@ final class GraftTable(val root: String, val tableName: String,
 
   override def name(): String = tableName
   override def schema(): StructType = tableSchema
+
+  /** Value identity, so the relation a `format("graft")` write re-caches
+    * ([[graft.sources.GraftSource]]) matches DataFrames cached over an
+    * earlier load of the same table.
+    */
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftTable =>
+      root == o.root && tableName == o.tableName && asOf == o.asOf
+    case _ => false
+  }
+  override def hashCode(): Int = (root, tableName, asOf).hashCode()
 
   /** Durable TBLPROPERTIES from the log, captured at loadTable time
     * (surfaced in DESCRIBE TABLE EXTENDED and SHOW TBLPROPERTIES) — a
@@ -670,11 +688,12 @@ final class GraftTable(val root: String, val tableName: String,
     }
 
   // ---- read path ----
-  /** DataFrameReader time-travel options (`versionAsOf` /
-    * `timestampAsOf`) need no handling here: Spark resolves them into
-    * `TableCatalog.loadTable(ident, version/timestamp)` (SPARK-37219),
-    * so the table arrives with `asOf` already pinned — same path as the
-    * SQL clauses.
+  /** Time-travel options need no handling here: the table arrives with
+    * `asOf` already pinned. SQL `VERSION AS OF` / `TIMESTAMP AS OF`
+    * resolve through `GraftCatalog.loadTable(ident, version/timestamp)`;
+    * `format("graft")`'s `versionAsOf` / `timestampAsOf` options through
+    * [[graft.sources.GraftSource.getTable]]. Both end in
+    * [[GraftTable.load]].
     */
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
@@ -964,11 +983,121 @@ final class GraftStagedTable(root: String, name0: String,
   override def abortStagedChanges(): Unit = client.abortAndClean()
 }
 
-/** V1 `sources.Filter` → public `Column` translation for the pushdown and
-  * DELETE paths. None = untranslatable (caller treats it as residual for
-  * scans, unsupported for deletes).
+/** V1 `sources.Filter` translation: to a public `Column` for the
+  * pushdown and DELETE paths ([[toColumn]]), and to the client's
+  * file-skipping tiers for [[GraftBatchScan]] ([[boundsOf]], [[eqOf]],
+  * [[inOf]], [[isNullOf]]).
   */
 object FilterTranslation {
+  /** Range-shaped conjuncts → inclusive per-column prune bounds for
+    * [[GraftClient.prunedObjects]]. Only shapes whose violation PROVES no
+    * row in an object can match are eligible; everything else simply
+    * doesn't prune.
+    */
+  def boundsOf(f: Filter): Seq[(String, (Any, Any))] = f match {
+    case sources.EqualTo(a, v) => Seq(a -> (v, v))
+    // a <=> v with v non-null matches exactly the rows a = v does
+    // (null <=> v is false), so it prunes identically; the v = null
+    // form is the IS NULL tier's ([[isNullOf]])
+    case sources.EqualNullSafe(a, v) if v != null => Seq(a -> (v, v))
+    case sources.GreaterThan(a, v) => Seq(a -> (v, null))
+    case sources.GreaterThanOrEqual(a, v) => Seq(a -> (v, null))
+    case sources.LessThan(a, v) => Seq(a -> (null, v))
+    case sources.LessThanOrEqual(a, v) => Seq(a -> (null, v))
+    case sources.In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
+      // bound by the value span; exactness comes from Spark's re-apply
+      val norm = vs.map(ColStats.normalize)
+      if (norm.forall(_.isInstanceOf[Long]))
+        Seq(a -> (norm.map(_.asInstanceOf[Long]).min,
+          norm.map(_.asInstanceOf[Long]).max))
+      else if (norm.forall(v => v.isInstanceOf[Long] || v.isInstanceOf[Double]))
+        Seq(a -> (norm.map(toD).min, norm.map(toD).max))
+      else if (norm.forall(_.isInstanceOf[String]))
+        Seq(a -> (norm.map(_.asInstanceOf[String]).min,
+          norm.map(_.asInstanceOf[String]).max))
+      else Nil
+    case sources.StringStartsWith(a, v) if v.nonEmpty =>
+      // LIKE 'p%' prunes through the string min/max: rows match only in
+      // [p, prefixUpperBound(p)] (null upper = unbounded). Parquet's
+      // truncated string stats are conservative the same way, so the
+      // bound never false-prunes.
+      Seq(a -> (v, ColStats.prefixUpperBound(v)))
+    case sources.And(l, r) => boundsOf(l) ++ boundsOf(r)
+    case _ => Nil
+  }
+
+  /** Equality conjuncts → bloom-probe candidates (stats bounds come from
+    * [[boundsOf]]; [[GraftClient.prunedObjects]] applies both tiers).
+    */
+  def eqOf(f: Filter): Seq[(String, Any)] = f match {
+    case sources.EqualTo(a, v) if v != null => Seq(a -> v)
+    case sources.EqualNullSafe(a, v) if v != null => Seq(a -> v) // see boundsOf
+    case sources.And(l, r) => eqOf(l) ++ eqOf(r)
+    case _ => Nil
+  }
+
+  /** IN-shaped conjuncts → per-value disjunctive prune lists: an object
+    * survives only if at least one listed value passes its stats AND
+    * bloom, so a scattered IN opens the matching objects, not the whole
+    * value span ([[boundsOf]] still emits the span — both are applied,
+    * the tighter wins). NO length cap: lists at or under
+    * [[graft.table.GraftClient.InListNarrowCap]] take the bounded
+    * probe-hash-job path, wider ones the driver-side
+    * [[graft.table.WideProbeIndex]] probe (O(log objects + hits) per
+    * value) — a 1,000-value point-set query opens the matched objects
+    * either way, never the [min,max] span.
+    */
+  def inOf(f: Filter): Seq[(String, Seq[Any])] = f match {
+    case sources.In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
+      Seq(a -> vs.toSeq)
+    case sources.And(l, r) => inOf(l) ++ inOf(r)
+    // Catalyst pushes `k = 5 OR k = 900` as Or(EqualTo, EqualTo) — it
+    // has no or-to-IN rewrite — so without this fold the disjunction
+    // pruned NOTHING (boundsOf skips Or too). A same-column OR of
+    // point shapes IS an IN list; mixed columns stay unprunable.
+    case or: sources.Or => pointSet(or).toSeq
+    case _ => Nil
+  }
+
+  /** A filter that holds only when ONE column takes a value from a
+    * finite set: EqualTo / IN / same-column ORs of those, recursively.
+    */
+  private def pointSet(f: Filter): Option[(String, Seq[Any])] = f match {
+    case sources.EqualTo(a, v) if v != null => Some(a -> Seq(v))
+    case sources.In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
+      Some(a -> vs.toSeq)
+    case sources.Or(l, r) => (pointSet(l), pointSet(r)) match {
+      case (Some((c1, v1)), Some((c2, v2))) if c1 == c2 =>
+        Some((c1, v1 ++ v2))
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** Conjuncts probing a column for NULL (`IS NULL`, `<=> NULL`): an
+    * object whose footer stats say ZERO nulls for the column can be
+    * skipped — at 100 TB a "find rows missing this field" audit opens
+    * only the objects that actually hold nulls. Strictly conservative:
+    * objects without a null count (no stats entry — including pre-add
+    * schema-evolution objects, whose physical absence READS as null)
+    * are kept.
+    */
+  def isNullOf(f: Filter): Seq[String] = f match {
+    case sources.IsNull(a) => Seq(a)
+    case sources.EqualNullSafe(a, null) => Seq(a)
+    case sources.And(l, r) => isNullOf(l) ++ isNullOf(r)
+    case _ => Nil
+  }
+
+  private def toD(v: Any): Double = v match {
+    case l: Long => l.toDouble
+    case d: Double => d
+    case other => sys.error(s"unexpected: $other")
+  }
+
+  /** None = untranslatable (caller treats it as residual for scans,
+    * unsupported for deletes).
+    */
   def toColumn(f: Filter): Option[Column] = f match {
     case sources.EqualTo(a, v) => attr(a).map(_ === lit(v))
     case sources.EqualNullSafe(a, v) => attr(a).map(_ <=> lit(v))

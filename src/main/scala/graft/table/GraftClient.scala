@@ -2110,8 +2110,8 @@ final class GraftClient(
     * the existing string min/max (parquet's truncated bounds stay
     * conservative), so only objects whose range can contain the prefix
     * are opened; the exact startsWith filter applies on top. The same
-    * compilation serves both connectors' pushed StringStartsWith
-    * filters ([[graft.sources.GraftRelation.boundsOf]]).
+    * compilation serves the batch scan's pushed StringStartsWith
+    * filters ([[graft.sql.FilterTranslation.boundsOf]]).
     */
   def scanPrefix(table: String, column: String, prefix: String): DataFrame = {
     require(prefix.nonEmpty, "empty prefix matches every row — use scan")
@@ -6476,8 +6476,8 @@ object GraftClient {
 
   /** TEST observability: how many live objects the last merge's DV scan
     * actually read, after span + point-set key pruning (-1 when the
-    * merge had no delete keys) — the merge-side mirror of the
-    * connectors' `lastScanObjectCount`.
+    * merge had no delete keys) — the merge-side mirror of
+    * [[graft.sql.GraftCatalog.lastScanObjectCount]].
     */
   @volatile private[graft] var lastMergeProbedObjects: Int = -1
 

@@ -259,7 +259,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // self-contained object per cell, and the IN filter prunes to the
     // probe set via point stats — probing IS file skipping
     val probed = SimilarityOps.ivfProbedCells(spark, dir).length
-    val opened = graft.sources.GraftRelation.lastScanObjectCount
+    val opened = graft.sql.GraftCatalog.lastScanObjectCount
     assert(opened === probed,
       s"expected the scan to open exactly the $probed probed cells' " +
         s"objects, got $opened")

@@ -398,7 +398,7 @@ class Round10Spec extends AnyFunSuite {
     val df = ss.read.format("graft").option("table", "t").load(root)
       .filter(col("k").startsWith("beta"))
     assert(df.count() == 5)
-    assert(graft.sources.GraftRelation.lastScanObjectCount == 1,
+    assert(graft.sql.GraftCatalog.lastScanObjectCount == 1,
       "pushed prefix filter must prune to one object")
   }
   // ---------------------------------------------------------------- //

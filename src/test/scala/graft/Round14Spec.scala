@@ -51,7 +51,7 @@ class Round14Spec extends AnyFunSuite {
       .filter(col("k").isInCollection(vals))
     assert(df.select("k").collect().map(_.getLong(0)).sorted.toSeq ===
       ((0L until 10L) ++ (70L until 80L)).toSeq)
-    assert(graft.sources.GraftRelation.lastScanObjectCount === 2)
+    assert(graft.sql.GraftCatalog.lastScanObjectCount === 2)
   }
 
   test("SQL catalog IN past the cap opens only matched objects") {
@@ -101,7 +101,7 @@ class Round14Spec extends AnyFunSuite {
     // FP per probe), so 200 probed values false-keep some objects by
     // design — the wide path's hard prune is the stats index tier, the
     // bloom tier is probabilistic narrowing
-    val kept = graft.sources.GraftRelation.lastScanObjectCount
+    val kept = graft.sql.GraftCatalog.lastScanObjectCount
     assert(kept >= 2 && kept < 8, s"kept=$kept")
   }
 
@@ -137,13 +137,13 @@ class Round14Spec extends AnyFunSuite {
       .filter(col("k") === 5L || col("k") === 72L)
     assert(df.select("k").collect().map(_.getLong(0)).sorted.toSeq ===
       Seq(5L, 72L))
-    assert(graft.sources.GraftRelation.lastScanObjectCount === 2)
+    assert(graft.sql.GraftCatalog.lastScanObjectCount === 2)
 
     // null-safe equality with a non-null literal prunes like EqualTo
     val nsafe = spark.read.format("graft").option("table", "pt").load(root)
       .filter(col("k") <=> 33L)
     assert(nsafe.select("k").collect().map(_.getLong(0)).toSeq === Seq(33L))
-    assert(graft.sources.GraftRelation.lastScanObjectCount === 1)
+    assert(graft.sql.GraftCatalog.lastScanObjectCount === 1)
 
     // IS NULL: 4 objects — all-non-null (nulls=0, pruned), half-null
     // (nulls>0, kept), all-null (NO stats entry for v, kept
@@ -170,7 +170,7 @@ class Round14Spec extends AnyFunSuite {
       .filter(col("v").isNull)
     assert(nulls.select("k").collect().map(_.getLong(0)).sorted.toSeq ===
       ((10L until 20L by 2) ++ (20L until 30L)).toSeq)
-    assert(graft.sources.GraftRelation.lastScanObjectCount === 2,
+    assert(graft.sql.GraftCatalog.lastScanObjectCount === 2,
       "IS NULL must open only the null-holding objects")
   }
 

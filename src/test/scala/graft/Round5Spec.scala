@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.GraftRelation
 import graft.table.GraftClient
 
 /** Round-5 surface: RESTORE (rollback-as-commit), the format("graft")
@@ -128,8 +127,8 @@ class Round5Spec extends AnyFunSuite {
     val rows = df.collect().map(r => r.getInt(0) -> r.getString(1)).toSet
     assert(rows === (35 to 44).map(k => k -> s"v$k").toSet)
     // 100 keys over 11 decade-objects; k∈[35,44] overlaps exactly 2
-    assert(GraftRelation.lastScanObjectCount === 2,
-      s"expected 2 objects after pruning, got ${GraftRelation.lastScanObjectCount}")
+    assert(graft.sql.GraftCatalog.lastScanObjectCount === 2,
+      s"expected 2 objects after pruning, got ${graft.sql.GraftCatalog.lastScanObjectCount}")
 
     // a non-range filter prunes nothing but stays correct
     val all = spark.read.format("graft").option("table", "t").load(dir)
@@ -142,8 +141,8 @@ class Round5Spec extends AnyFunSuite {
       .load(dir).filter(col("dec").isin(0, 10)).select("k").collect()
     assert(scattered.map(_.getInt(0)).sorted.toSeq ===
       ((1 to 9) ++ Seq(100)), "dec 0 holds k 1..9, dec 10 holds k 100")
-    assert(GraftRelation.lastScanObjectCount === 2,
-      s"IN should open 2 objects, got ${GraftRelation.lastScanObjectCount}")
+    assert(graft.sql.GraftCatalog.lastScanObjectCount === 2,
+      s"IN should open 2 objects, got ${graft.sql.GraftCatalog.lastScanObjectCount}")
   }
 
   test("format(graft) versionAsOf reads the historical snapshot") {
@@ -172,8 +171,8 @@ class Round5Spec extends AnyFunSuite {
     c.createTable("t", kvSchema)
     c.insert("t", kvDf((1 to 50).map(k => (k, s"v$k")): _*))
     c.commitTx()
-    val rel = GraftRelation(spark.sqlContext, dir, "t", None)
-    val sz = rel.sizeInBytes
+    val sz = spark.read.format("graft").option("table", "t").load(dir)
+      .queryExecution.optimizedPlan.stats.sizeInBytes
     assert(sz > 100 && sz < 1000000, s"implausible sizeInBytes: $sz")
   }
 
@@ -249,7 +248,7 @@ class Round5Spec extends AnyFunSuite {
     val viaSource = spark.read.format("graft").option("table", "t").load(dir)
       .filter(col("v") === "id0111")
     assert(viaSource.collect().map(_.getString(1)).toSeq === Seq("id0111"))
-    assert(GraftRelation.lastScanObjectCount === opened.length,
+    assert(graft.sql.GraftCatalog.lastScanObjectCount === opened.length,
       "connector pruned differently than scanEquals")
   }
 
