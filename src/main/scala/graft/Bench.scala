@@ -1,69 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** Queries run once, untimed, before any timed pass. tx_scan builds the
+    * shared GraftClient fixture; sim_ann_ivf_table its one-time IVF
+    * fixture (trained centroids + the cell-partitioned graft table, which
+    * the row exists to PROBE, not to build); the two stream rows their
+    * 3-micro-batch folds (the rows measure reads of the maintained
+    * tables); the two corpus rows their materialized dedup closures (a
+    * release run computes its closure ONCE; the compositions measure
+    * reads of it). */
+  private val fixtureQueries = Seq("tx_scan", "sim_ann_ivf_table",
+    "sim_ann_ivf_stream", "sketch_cms_stream", "dedup_corpus",
+    "dedup_corpus_spanning")
+
+  /** Untimed warm-up: JVM/codegen/parquet-footer setup and the one-time
+    * fixtures shouldn't be charged to whichever query happens to run
+    * first. A warm-up query that throws is reported with its error on
+    * stderr, not swallowed. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    def run(name: String, df: => DataFrame): Unit =
+      try df.count()
+      catch {
+        case e: Throwable =>
+          System.err.println(s"bench: warm-up $name failed: $e")
+      }
+    run("entry", SparkEntry.entry(spark))
+    fixtureQueries.foreach(q => run(q, SparkEntry.queries(q)(spark, sfDir)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 32 = the driver contract (local[32], shuffle=32). This was
-    // "4" through round 12, and the sf1 recipe omitted SPARK_GRAFT_CPUS —
-    // which is the whole story behind round 12's "contended" sf1 record:
-    // the heavy shuffle rows ran on 4 cores and read as 2x-over-anchor
-    // (winnow_pairs 15.9 s at local[4] vs 7.5 s at local[32], profiled
-    // round 13). A contract-shaped default makes the footgun impossible.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); set once at session build
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep 64-aggregate signature computations (minhash/simhash) inside
-      // whole-stage codegen (100-field default falls back to interpreted)
-      .config("spark.sql.codegen.maxFields", "300")
-      // SQL UPDATE/MERGE on graft catalog tables (GraftDml rewrite rules)
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
-      // Measured dead end kept as a knob: lowering AQE's coalescing
-      // floor (minPartitionSize 1m -> 64k) to parallelize the 100 KB-1 MB
-      // CPU-dense stages cost MORE in extra-task overhead across the
-      // suite than it bought (subset A/B: 13.4 s at 64k vs 12.0 s at the
-      // 1m default) — CPU-dense exchanges are spread explicitly at their
-      // call sites instead (Tables.spread).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "1m"))
-      // let AQE size the OUTPUT partitioning of persisted plans too: the
-      // iterative queries (label propagation, pagerank) persist their
-      // edge frames, and with the default=false those caches pin the
-      // static shuffle partition count — every round then scans 32/64
-      // near-empty cached partitions. With AQE sizing them the cache has
-      // as many partitions as its bytes warrant at ANY scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // untimed warmup: JVM/codegen/parquet-footer setup shouldn't be charged
-    // to whichever query happens to run first; touching a tx query builds
-    // the shared GraftClient fixture outside any timing window
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    try SparkEntry.queries("tx_scan")(spark, sfDir).count()
-    catch { case _: Throwable => }
-    // sim_ann_ivf_table exists to measure cell-pruned PROBE READS; its
-    // one-time fixture (trained centroids + the cell-partitioned graft
-    // table) is environment setup, so build it here where the tx
-    // fixtures build, not inside the first timed pass
-    try SparkEntry.queries("sim_ann_ivf_table")(spark, sfDir).count()
-    catch { case _: Throwable => }
-    // same contract for the STREAM-built fixtures: the rows exist to
-    // measure reads of the maintained tables, not the one-time
-    // 3-micro-batch folds that create them
-    // the materialized dedup-closure table is likewise environment
-    // setup: a release run computes its closure ONCE; the four corpus
-    // compositions measure reads of it, not the one-time build
-    Seq("sim_ann_ivf_stream", "sketch_cms_stream", "dedup_corpus",
-      "dedup_corpus_spanning")
-      .foreach { q =>
-        try SparkEntry.queries(q)(spark, sfDir).count()
-        catch { case _: Throwable => }
-      }
+    warmUp(spark, sfDir)
     // min over SEPARATED full passes, not back-to-back repeats: transient
     // host contention (another JVM on this box) lasts seconds-to-minutes, so
     // two adjacent samples of one query are both poisoned while samples a
@@ -71,8 +40,7 @@ object Bench {
     // adjacent runs — during a contended driver run)
     // A query that throws records no time: its time-to-failure would
     // read as a fast run.
-    def time(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def time(name: String, fn: (SparkSession, String) => DataFrame)
         : Option[Double] = {
       val t0 = System.nanoTime()
       try {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -12,38 +11,14 @@ import scala.collection.mutable
   * driver contract.
   *
   * Usage: `sbt "runMain graft.BenchProfile q1 q2 ..."` (defaults to the
-  * historical top-of-bench set). Same session shape as [[Bench]].
+  * historical top-of-bench set). Same session and warm-up as [[Bench]].
   */
 object BenchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "300")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "1m"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    // same untimed fixture warmup as Bench
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    try SparkEntry.queries("tx_scan")(spark, sfDir).count()
-    catch { case _: Throwable => }
-    try SparkEntry.queries("sim_ann_ivf_table")(spark, sfDir).count()
-    catch { case _: Throwable => }
-    Seq("sim_ann_ivf_stream", "sketch_cms_stream", "dedup_corpus",
-      "dedup_corpus_spanning").foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).count()
-      catch { case _: Throwable => }
-    }
+    Bench.warmUp(spark, sfDir)
 
     final case class StageRow(name: String, tasks: Int, runMs: Long,
         cpuMs: Long, shRead: Long, shWrite: Long, wallMs: Long)
@@ -73,7 +48,8 @@ object BenchProfile {
       "text_bpe_merges", "graph_pagerank")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      try fn(spark, sfDir).count() catch { case _: Throwable => } // warm
+      try fn(spark, sfDir).count() // warm
+      catch { case e: Throwable => println(s"$n warm-up FAILED: $e") }
       jobStart.clear(); jobWall.clear(); stages.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name subset (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); set once at session build
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep 64-aggregate signature computations (minhash/simhash) inside
-      // whole-stage codegen; the 100-field default silently drops them to
-      // interpreted eval (measured 3.5x)
-      .config("spark.sql.codegen.maxFields", "300")
-      // SQL UPDATE/MERGE on graft catalog tables (GraftDml rewrite rules)
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -58,14 +58,6 @@ object CorpusOps {
         col("n_members"))
       .orderBy(col("survivor_id"))
 
-  /** Member-level view of the SPANNING closure (doc_id → cluster) —
-    * the closure-delta probe's comparison surface (graft.BenchClosure).
-    */
-  def dedupCorpusSpanningMembers(spark: SparkSession,
-      dir: String): DataFrame =
-    clusterRanks(spark, dir, spanning = true)
-      .select(col("doc_id"), col("cluster_id").as("span_cl"))
-
   /** The shared closure+ranking frame behind [[dedupCorpus]],
     * [[corpusPairs]], and (via the survivor set) the curation funnel
     * and release manifest: every document with its cluster id,

@@ -293,16 +293,12 @@ final class GraftBatchScan(private val table: GraftTable,
                 table.tableName, schema, files, cn, vs)
             }
             GraftCatalog.lastScanObjectCount = files.length
-            // operational valve (and the A/B lever BenchColumnar
-            // measures): spark.graft.columnarScan=false forces the row
-            // pipeline even on a pure parquet lineage
-            val columnarOn = SparkSession.active.conf
-              .get("spark.graft.columnarScan", "true").toBoolean
+            // a pure parquet lineage serves the vectorized reader's
+            // batches (1.6x on scan-heavy aggregates: BASELINE.md
+            // "Columnar native scan, measured")
             (c.scanKeeping(table.tableName, files.map(_.path).toSet),
-              if (columnarOn)
-                c.pureScanDf(table.tableName, required, files)
-                  .flatMap(columnarRdd)
-              else None)
+              c.pureScanDf(table.tableName, required, files)
+                .flatMap(columnarRdd))
         }
         colBatches match {
           case Some(batches) =>

@@ -3917,7 +3917,8 @@ final class GraftClient(
             // conflict storm (N writers hammering one log) re-trying at
             // full speed lets an unlucky writer lose every arbitration
             // while faster peers keep advancing the slot — measured over
-            // the HTTP store (BenchHttp: a writer lost 50 straight).
+            // the HTTP store (a writer lost 50 straight: BASELINE.md
+            // "HTTP store commit protocol").
             // Randomized sleep desynchronizes the contenders, the same
             // cure every optimistic-commit protocol ships.
             Thread.sleep(scala.util.Random.nextInt(

@@ -920,8 +920,10 @@ final class TxLog(store: ObjectStore) {
       maxPartBytes: Int = DefaultCkptPartBytes): Unit =
     checkpointImpl(snapshot, maxPartBytes, parquet = true)
 
-  /** The legacy JSON-part writer — kept for the read-compat pin and the
-    * format bench (BenchCkpt); new checkpoints are always parquet.
+  /** The legacy JSON-part writer — kept for the read-compat pin
+    * (CkptFormatSpec); new checkpoints are always parquet. Its size and
+    * cold-begin cost against parquet parts are in BASELINE.md
+    * "Checkpoint format".
     */
   private[graft] def checkpointJson(snapshot: Snapshot,
       maxPartBytes: Int = DefaultCkptPartBytes): Unit =
@@ -1134,10 +1136,11 @@ final class TxLog(store: ObjectStore) {
           // parts are INDEPENDENT by construction (the writer cuts the
           // fold at action boundaries), so a cold begin() fetches and
           // decodes them concurrently — at a 10⁶-object checkpoint the
-          // driver-side decode is the cold-start bottleneck (BenchCkpt:
-          // ~3× at 8 threads). Bounded pool; results append IN ORDER,
-          // so the replayed snapshot is identical to the sequential
-          // fold. In-flight driver memory ≈ threads × maxPartBytes.
+          // driver-side decode is the cold-start bottleneck (~3× at 8
+          // threads: BASELINE.md "10⁶-object cold begin"). Bounded
+          // pool; results append IN ORDER, so the replayed snapshot is
+          // identical to the sequential fold. In-flight driver memory ≈
+          // threads × maxPartBytes.
           // ObjectStore.read must be thread-safe (all impls are:
           // filesystem reads, a ConcurrentHashMap, java.net.http).
           val threads = math.min(count,

@@ -19,21 +19,15 @@ import graft.table.GraftClient
 import graft.tx.CommitConflictException
 
 object SparkTestSession {
+  /** The shared session's builder: [[GraftSession]]'s at 4 cores plus
+    * the one test-only setting. Single-maintainer test fixtures vacuum
+    * the orphans they just made; the concurrent-writer age gate is
+    * exercised explicitly (VacuumSafetySpec sets it nonzero locally). */
+  def builder: SparkSession.Builder = GraftSession.builder(4)
+    .config("spark.graft.vacuum.orphanRetainMs", "0")
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "300")
-      // SQL UPDATE/MERGE on graft catalog tables (GraftDml rewrite rules)
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
-      // single-maintainer test fixtures vacuum the orphans they just
-      // made; the concurrent-writer age gate is exercised explicitly
-      // (VacuumSafetySpec sets it nonzero locally)
-      .config("spark.graft.vacuum.orphanRetainMs", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = builder.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -257,18 +257,10 @@ class NativeScanSpec extends AnyFunSuite {
     val v = c.latestVersion - 1
     assert(spark.sql(s"SELECT count(*) FROM $cat.fact VERSION AS OF $v")
       .collect() === Array(Row(160L)))
-    // the operational valve forces the row pipeline on a pure scan
     c.newTx(); c.compact("fact"); c.commitTx() // retire the DV: pure again
     assert(spark.sql(q).collect() === afterDv)
     assert(graft.sql.GraftCatalog.lastScanColumnar,
       "post-compact scan must be pure (columnar) again")
-    spark.conf.set("spark.graft.columnarScan", "false")
-    try {
-      val valved = spark.sql(q).collect()
-      assert(!graft.sql.GraftCatalog.lastScanColumnar,
-        "columnarScan=false must force the row pipeline")
-      assert(valved === afterDv)
-    } finally spark.conf.unset("spark.graft.columnarScan")
   }
 
   test("time travel and buffered-tx reads survive the native scan") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.table.GraftClient
 
 /** Forked-JVM writer for [[TwoJvmRaceSpec]]: its own SparkSession, its
@@ -31,13 +29,7 @@ object RaceChildMain {
         new graft.store.S3ObjectStore(url.stripPrefix("s3+"))
       case url => new graft.store.HttpObjectStore(url)
     }
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-race-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(2).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val c = new GraftClient(spark, root, logStore = logStore)

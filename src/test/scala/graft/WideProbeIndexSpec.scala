@@ -105,6 +105,7 @@ class WideProbeIndexSpec extends AnyFunSuite {
     // visit accounting: candidates() on a disjoint layout returns
     // exactly the hit — the iterator can't have walked the array
     // (a linear tier would return the same set but only after n tests;
-    // the timing bench in BenchWide records the wall-clock difference)
+    // BASELINE.md "Wide-probe interval index" records the wall-clock
+    // difference)
   }
 }
