@@ -2,7 +2,7 @@
 """A/B two git revisions on one perfbench workload, in alternating order.
 
     python3 scripts/perfbench_ab.py PARENT CHANGE --workload ingest \\
-        [--seed 1] [--pairs 10] [--seconds 15] [--trace 0] \\
+        [--seed 1] [--pairs 10] [--seconds 15] [--trace 0] [--control] \\
         [--workdir /tmp/perfbench_ab]
 
 Run from the repository. Each revision (anything `git archive` takes: a
@@ -17,7 +17,16 @@ per-layer with `--trace 1`) it prints the median (q1, q3) of each
 revision, the change/parent ratio of the medians, and in how many pairs
 the change was better, in the direction `BENCHMARK.json` declares. The
 parent's interquartile range is printed next to the difference of the
-medians: a gain is resolved only when that difference is larger. A run
+medians: a gain is resolved only when that difference is larger.
+
+`--control` adds an A/A arm: each pair also runs the parent a second
+time (as `control`, from the same build), with the change between the
+two parent runs (parent, change, control in even pairs; control, change,
+parent in odd ones). Next to each metric's change/parent ratio it then
+prints the same ratio for control/parent and the band (min, max) of
+the per-pair control/parent ratios: the spread that two runs of
+identical code show on this host. A change's ratio inside that band
+is not told apart from noise. A run
 that is not `correct`, or that fails, is flagged; the script then exits 1.
 Every run's result line is also kept in `<workdir>/<workload>.results.jsonl`.
 """
@@ -84,6 +93,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seconds", type=float, default=15)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--control", action="store_true",
+                    help="also run the parent a second time in each pair")
     ap.add_argument("--workdir", default="/tmp/perfbench_ab")
     a = ap.parse_args()
 
@@ -96,12 +107,17 @@ def main():
         dirs[label], sha = export(rev, a.workdir, label)
         print(f"{label}: {rev} = {sha[:12]} in {dirs[label]}", flush=True)
 
-    results = {"parent": [], "change": []}
+    dirs["control"] = dirs["parent"]
+    results = {"parent": [], "change": [], "control": []}
     flagged = []
     log = open(os.path.join(a.workdir, f"{a.workload}.results.jsonl"), "w")
     for i in range(a.pairs):
         seed = a.seed + i
-        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        if a.control:
+            order = (("parent", "change", "control") if i % 2 == 0 else
+                     ("control", "change", "parent"))
+        else:
+            order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for label in order:
             r = run(dirs[label], a.workload, seed, a.seconds, a.trace)
             ok = r is not None and r["correct"] and r["failed"] == 0
@@ -119,29 +135,41 @@ def main():
                             if k in ("op_p50_ms", "op_tail_ms", "wall_s"))) +
                   ("" if ok else "  <-- NOT CORRECT"), flush=True)
 
-    pairs = [(p, c) for p, c in zip(results["parent"], results["change"])
-             if p is not None and c is not None]
-    print(f"\n{a.workload}, {len(pairs)} pairs, seeds {a.seed}.."
+    ctl = results["control"] if a.control else [{}] * a.pairs
+    triples = [(p, c, k) for p, c, k in
+               zip(results["parent"], results["change"], ctl)
+               if p is not None and c is not None and k is not None]
+    print(f"\n{a.workload}, {len(triples)} pairs, seeds {a.seed}.."
           f"{a.seed + a.pairs - 1}, {a.seconds:g} s runs, "
           f"trace {a.trace}: median (q1, q3)")
     print(f"{'metric':32} {'parent':>28} {'change':>28} {'ratio':>6} "
-          f"{'wins':>5} {'|diff|':>9} {'par IQR':>9}")
+          f"{'wins':>5} {'|diff|':>9} {'par IQR':>9}" +
+          (f" {'A/A':>6} {'A/A band':>13} {'A/A|diff|':>9}"
+           if a.control else ""))
     for name in better:
-        ps = [p[name] for p, _ in pairs if p.get(name) is not None]
-        cs = [c[name] for _, c in pairs if c.get(name) is not None]
-        if not ps or not cs:
+        have = [(p[name], c[name], k.get(name)) for p, c, k in triples
+                if p.get(name) is not None and c.get(name) is not None]
+        if not have:
             continue
-        p1, pm, p3 = quartiles(sorted(ps))
-        c1, cm, c3 = quartiles(sorted(cs))
+        ps = sorted(p for p, _, _ in have)
+        cs = sorted(c for _, c, _ in have)
+        p1, pm, p3 = quartiles(ps)
+        c1, cm, c3 = quartiles(cs)
         sign = 1 if better[name] == "higher" else -1
-        wins = sum(1 for p, c in pairs
-                   if p.get(name) is not None and c.get(name) is not None
-                   and sign * (c[name] - p[name]) > 0)
+        wins = sum(1 for p, c, _ in have if sign * (c - p) > 0)
         ratio = f"{cm / pm:.3f}" if pm else "-"
-        print(f"{name:32} {f'{pm:.4g} ({p1:.4g}, {p3:.4g})':>28} "
-              f"{f'{cm:.4g} ({c1:.4g}, {c3:.4g})':>28} {ratio:>6} "
-              f"{f'{wins}/{len(pairs)}':>5} {abs(cm - pm):>9.4g} "
-              f"{p3 - p1:>9.4g}")
+        line = (f"{name:32} {f'{pm:.4g} ({p1:.4g}, {p3:.4g})':>28} "
+                f"{f'{cm:.4g} ({c1:.4g}, {c3:.4g})':>28} {ratio:>6} "
+                f"{f'{wins}/{len(have)}':>5} {abs(cm - pm):>9.4g} "
+                f"{p3 - p1:>9.4g}")
+        ks = [k for _, _, k in have if k is not None]
+        if a.control and ks and pm:
+            km = statistics.median(ks)
+            band = [k / p for p, _, k in have if k is not None and p]
+            line += (f" {km / pm:>6.3f} "
+                     f"{f'{min(band):.3f}-{max(band):.3f}':>13} "
+                     f"{abs(km - pm):>9.4g}")
+        print(line)
     if flagged:
         print("\nruns not correct:\n  " + "\n  ".join(flagged))
         sys.exit(1)

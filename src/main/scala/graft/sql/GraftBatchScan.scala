@@ -281,10 +281,12 @@ final class GraftBatchScan(private val table: GraftTable,
     table.withClient { c =>
       c.newTx() // snapshot for planning; rollback is safe (immutable files)
       try {
-        val (df, colBatches) = asOf match {
+        // the row pipeline's frame, built only when no columnar batches
+        // serve the scan
+        val (rows, colBatches) = asOf match {
           case Some(v) =>
             GraftCatalog.lastScanObjectCount = -1
-            (c.scanAsOf(table.tableName, v), None)
+            (() => c.scanAsOf(table.tableName, v), None)
           case None =>
             val schema = c.schemaOf(table.tableName)
             var files = prunedFiles(c)
@@ -296,7 +298,7 @@ final class GraftBatchScan(private val table: GraftTable,
             // a pure parquet lineage serves the vectorized reader's
             // batches (1.6x on scan-heavy aggregates: BASELINE.md
             // "Columnar native scan, measured")
-            (c.scanKeeping(table.tableName, files.map(_.path).toSet),
+            (() => c.scanKeeping(table.tableName, files.map(_.path).toSet),
               c.pureScanDf(table.tableName, required, files)
                 .flatMap(columnarRdd))
         }
@@ -309,7 +311,7 @@ final class GraftBatchScan(private val table: GraftTable,
             // in-scan filtering is a row-volume reducer; Spark re-applies
             // every pushed filter above the scan regardless
             val filtered = pushed.flatMap(FilterTranslation.toColumn)
-              .foldLeft(df)((d, p) => d.filter(p))
+              .foldLeft(rows())((d, p) => d.filter(p))
             Left(SqlShim.scanRdd(filtered
               .select(required.fieldNames.toIndexedSeq.map(col): _*)))
         }

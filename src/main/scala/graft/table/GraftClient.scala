@@ -5,8 +5,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SqlShim
 import org.apache.spark.sql.types._
 
 import graft.store.{LocalObjectStore, ObjectStore}
@@ -2036,31 +2038,34 @@ final class GraftClient(
     applyDefaults(schema, all)
   }
 
-  /** Suppress rows named by live deletion vectors: an anti join on the
-    * provenance key. The key side is broadcast while the LIVE DV total
-    * stays under [[GraftClient.BroadcastKeyRowGate]] — priced
-    * metadata-only from Σ `AddDeleteVector.numRows` in the log, no
-    * extra job — so the common case (DVs exist precisely because the
-    * delete was small) stays shuffle-free on the data side. DV rows
-    * accumulate across deletes until compaction retires them, and the
-    * subquery-DML path hands this join arbitrary user key sets, so
-    * past the gate the hint is dropped and the anti join plans
-    * shuffled: bounded executor memory instead of an unbounded driver
-    * collect. (AQE still broadcasts on its own when the runtime size
-    * warrants.)
+  /** Suppress rows named by live deletion vectors. While the LIVE DV
+    * total stays under [[GraftClient.BroadcastKeyRowGate]] — priced
+    * metadata-only from Σ `AddDeleteVector.numRows` in the log — the
+    * keys are read on the driver ([[DvKeys.maskOf]]: parquet-hadoop
+    * through the session's Hadoop conf, no Spark job) and masked inside
+    * the scan by one [[NotDeleted]] filter, so the read plans no join
+    * and runs no broadcast job. The keys stay in a JVM-wide cache keyed
+    * by DV object path and bounded by total keys ([[DvKeys.MaxCachedKeys]],
+    * the gate's 4 M keys, 64 MB): DV objects are immutable, so a repeat
+    * read of the same DVs opens none of them. DV rows accumulate across
+    * deletes until compaction retires them, and the subquery-DML path
+    * hands this step arbitrary user key sets, so past the gate the DV
+    * objects are read as a second relation and anti-joined shuffled:
+    * bounded executor memory instead of an unbounded driver read.
     */
   private def applyDvs(df: DataFrame, dvs: Seq[AddDeleteVector]): DataFrame =
     if (dvs.isEmpty) df
-    else {
+    else if (dvs.map(_.numRows).sum <= broadcastKeyRowGate) {
+      val mask = DvKeys.maskOf(dataFs, dvs.map(d => dataPath(d.path)))
+      df.filter(SqlShim.column(NotDeleted(UnresolvedAttribute.quoted(TxIdCol),
+        UnresolvedAttribute.quoted(RowIdxCol), mask)))
+    } else {
       val keys = strictRead
         .schema(StructType(Seq(
           StructField(TxIdCol, LongType, nullable = false),
           StructField(RowIdxCol, LongType, nullable = false))))
         .parquet(dvs.map(d => s"$rootDir/${d.path}"): _*)
-      val bcast = dvs.map(_.numRows).sum <= broadcastKeyRowGate
-      GraftClient.lastDvBroadcast = bcast
-      df.join(if (bcast) broadcast(keys) else keys,
-          Seq(TxIdCol, RowIdxCol), "left_anti")
+      df.join(keys, Seq(TxIdCol, RowIdxCol), "left_anti")
         // a USING join fronts the key columns; restore the scan layout
         .select(df.columns.map(col).toIndexedSeq: _*)
     }
@@ -3792,7 +3797,6 @@ final class GraftClient(
     val dvs = t.snapshot.liveDvs(table, t.actions.toSeq)
     if (dvs.nonEmpty) {
       val dvBcast = dvs.map(_.numRows).sum <= broadcastKeyRowGate
-      GraftClient.lastDvBroadcast = dvBcast
       val dvKeys = strictRead
         .schema(StructType(Seq(
           StructField(TxIdCol, LongType, nullable = false),
@@ -6458,9 +6462,10 @@ object GraftClient {
     */
   val InListNarrowCap: Int = 64
 
-  /** Key-row ceiling under which the DV anti join, the DV-shrink
-    * semi/anti joins, and the merge/key-delete semi join still carry a
-    * forced `broadcast()` hint. Past it the hint is DROPPED and Spark
+  /** Key-row ceiling under which a scan reads its DV keys on the driver
+    * and masks rows in place ([[applyDvs]]), and the DV-shrink semi/anti
+    * joins and the merge/key-delete semi join still carry a forced
+    * `broadcast()` hint. Past it the hint is DROPPED and Spark
     * plans a shuffled join (AQE may still choose broadcast if the
     * runtime size is genuinely small — the gate only removes the
     * *forced* driver-side collect). 4 M provenance keys ≈ 64 MB raw /
@@ -6488,12 +6493,6 @@ object GraftClient {
     */
   @volatile private[graft] var lastMergeDelKeyCount: Long = -1L
   @volatile private[graft] var lastMergeKeysBroadcast: Boolean = true
-
-  /** TEST observability: whether the last DV apply/shrink kept the
-    * forced broadcast hint (false ⇒ the Σ numRows gate tripped and the
-    * anti join planned shuffled).
-    */
-  @volatile private[graft] var lastDvBroadcast: Boolean = true
 
   /** The numeric rank of a string in the z grid's string-axis space —
     * the driver-side twin of `zRankRawExpr`'s SQL

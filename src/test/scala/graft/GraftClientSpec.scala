@@ -11,8 +11,11 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.table.GraftClient
@@ -30,6 +33,71 @@ object SparkTestSession {
     val s = builder.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  private val Before = "marker-before"
+  private val After = "marker-after"
+
+  /** Runs `f` between two marker jobs and returns what reached `events`
+    * between the markers' job starts. Listeners on the bus's shared
+    * queue get its events in order, one at a time, so what arrives
+    * between the markers is exactly what `f` caused.
+    */
+  private def marked(events: LinkedBlockingQueue[AnyRef])
+      (f: => Unit): Seq[AnyRef] = {
+    val sc = spark.sparkContext
+    def marker(id: String): Unit = {
+      sc.setJobGroup(id, id)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    marker(Before)
+    f
+    marker(After)
+    Iterator.continually(Option(events.poll(60, TimeUnit.SECONDS))
+      .getOrElse(throw new AssertionError(
+        "the marker job never reached the listener")))
+      .takeWhile(_ != After).toVector.dropWhile(_ != Before).drop(1)
+  }
+
+  /** Puts each job start on `events`: a marker's as its group id. */
+  private def jobStarts(events: LinkedBlockingQueue[AnyRef]) =
+    new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(g => g == Before || g == After)
+          .getOrElse(e))
+    }
+
+  /** Spark jobs started while `f` runs. */
+  def jobsDuring(f: => Unit): Int = {
+    val events = new LinkedBlockingQueue[AnyRef]()
+    val listener = jobStarts(events)
+    spark.sparkContext.addSparkListener(listener)
+    try marked(events)(f).size
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Optimized plans of the Dataset actions `f` runs, as a
+    * `QueryExecutionListener` on this session receives them (it listens
+    * on the shared queue too).
+    */
+  def plansDuring(f: => Unit): Seq[LogicalPlan] = {
+    val events = new LinkedBlockingQueue[AnyRef]()
+    val listener = jobStarts(events)
+    val plans = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution,
+          ns: Long): Unit = events.put(qe.optimizedPlan)
+      override def onFailure(fn: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(plans)
+    try marked(events)(f).collect { case p: LogicalPlan => p }
+    finally {
+      spark.listenerManager.unregister(plans)
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }
 
@@ -426,36 +494,6 @@ class GraftClientSpec extends AnyFunSuite {
     c.commitTx()
   }
 
-  /** Spark jobs started while `f` runs: the job starts the listener bus
-    * delivers between two marker jobs (it delivers in order, so once the
-    * second marker arrives every job `f` started has been seen).
-    */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def marker(id: String): Unit = {
-      sc.setJobGroup(id, id)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobs-before")
-      f
-      marker("jobs-after")
-      val seen = Iterator.continually(
-        Option(groups.poll(60, TimeUnit.SECONDS))
-          .getOrElse(fail("the marker job never reached the listener")))
-        .takeWhile(_ != "jobs-after").toVector
-      seen.dropWhile(_ != "jobs-before").size - 1
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a writeRow commit runs no Spark job and writes what insert writes") {
     val ss = spark
     import ss.implicits._
@@ -473,7 +511,7 @@ class GraftClientSpec extends AnyFunSuite {
         c.addConstraint("inserted", "b_pos", e)
         c.commitTx()
       }
-      val jobs = jobsDuring {
+      val jobs = SparkTestSession.jobsDuring {
         c.newTx()
         rows.foreach { case (a, b) => c.writeRow("buffered", Seq(a, b)) }
         c.commitTx()

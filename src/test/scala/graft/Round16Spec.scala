@@ -10,13 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.table.GraftClient
 
-/** Round-16 pins: the forced `broadcast()` hints on the DV-apply and
-  * merge/key-delete legs are SIZE-GATED ([[GraftClient.BroadcastKeyRowGate]],
-  * override `spark.graft.broadcastKeyRowGate`) — under the gate the
-  * small side still broadcasts (shuffle-free data side), past it the
-  * hint drops and Spark plans a shuffled join, so neither a table
+/** Round-16 pins: the deletion-vector and merge/key-delete legs are
+  * SIZE-GATED ([[GraftClient.BroadcastKeyRowGate]], override
+  * `spark.graft.broadcastKeyRowGate`). Under the gate a scan reads its
+  * DV keys on the driver into a JVM-wide cache (bounded by total keys,
+  * [[graft.table.DvKeys.MaxCachedKeys]]) and masks rows with one filter
+  * inside the scan — no join, no broadcast job — while the DV-shrink and
+  * merge key joins keep their broadcast hint. Past the gate the DV anti
+  * join and those hints drop to shuffled joins, so neither a table
   * carrying hundreds of millions of un-compacted DV rows nor a
-  * fact-sized CDC merge source can force an unbounded driver collect.
+  * fact-sized CDC merge source can force an unbounded driver read.
   * Row effects must be identical on both sides of the gate.
   */
 class Round16Spec extends AnyFunSuite {
@@ -27,8 +30,9 @@ class Round16Spec extends AnyFunSuite {
   private def joinHints(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.optimizedPlan.collect { case j: LJoin => j.hint }
 
-  test("applyDvs: DV key sets past the row gate drop the broadcast " +
-    "hint (shuffled anti join), under it they keep it — same rows") {
+  test("applyDvs: under the row gate a DV'd scan masks rows inside the " +
+    "scan (no join); past it the anti join plans shuffled, unhinted — " +
+    "same rows") {
     val root = Files.createTempDirectory("graft_r16_dvgate").toString
     val c = new GraftClient(spark, root)
     c.newTx()
@@ -46,22 +50,23 @@ class Round16Spec extends AnyFunSuite {
       c.newTx()
       val scanned = c.scan("t")
       c.commitTx()
-      assert(!GraftClient.lastDvBroadcast)
-      // no join in the gated scan carries a forced broadcast hint
+      // the DV anti join is there, and carries no forced broadcast hint
+      assert(joinHints(scanned).nonEmpty)
       assert(joinHints(scanned).forall(h =>
         h.leftHint.isEmpty && h.rightHint.isEmpty))
       assert(scanned.count() === 150L)
       assert(scanned.filter(col("k").between(50, 99)).count() === 0L)
     } finally spark.conf.unset(GateKey)
 
-    // default gate: the same 50-row DV broadcasts (hinted join present)
+    // default gate: the same 50-row DV is a filter inside the scan
     c.newTx()
-    val hinted = c.scan("t")
+    val masked = c.scan("t")
     c.commitTx()
-    assert(GraftClient.lastDvBroadcast)
-    assert(joinHints(hinted).exists(h =>
-      h.leftHint.nonEmpty || h.rightHint.nonEmpty))
-    assert(hinted.count() === 150L)
+    assert(joinHints(masked).isEmpty)
+    assert(masked.queryExecution.optimizedPlan.toString
+      .contains("not_deleted(_tx_id"))
+    assert(masked.count() === 150L)
+    assert(masked.filter(col("k").between(50, 99)).count() === 0L)
   }
 
   test("deleteByKeys: a past-gate past-cap key set routes pruning " +
@@ -149,10 +154,14 @@ class Round16Spec extends AnyFunSuite {
       // CoW delete overlapping the DV'd rows: phase-3 shrink must drop
       // the now-physically-removed keys from the DV via the shuffled
       // (unhinted) semi/anti joins and still keep counts exact
-      c.newTx()
-      c.deleteRows("s", "k", 30L, 59L)
-      c.commitTx()
-      assert(!GraftClient.lastDvBroadcast)
+      val plans = SparkTestSession.plansDuring {
+        c.newTx()
+        c.deleteRows("s", "k", 30L, 59L)
+        c.commitTx()
+      }
+      val hints = plans.flatMap(_.collect { case j: LJoin => j.hint })
+      assert(hints.nonEmpty) // the shrink's semi join ran
+      assert(hints.forall(h => h.leftHint.isEmpty && h.rightHint.isEmpty))
     } finally spark.conf.unset(GateKey)
     c.newTx()
     val after = c.scan("s")
