@@ -28,7 +28,13 @@ the per-pair control/parent ratios: the spread that two runs of
 identical code show on this host. A change's ratio inside that band
 is not told apart from noise. A run
 that is not `correct`, or that fails, is flagged; the script then exits 1.
-Every run's result line is also kept in `<workdir>/<workload>.results.jsonl`.
+
+Host contention: the `cpu` line of `/proc/stat` is read before and after
+each run, and the run's CPU steal % and iowait % (shares of all CPU time
+over the run, build included) are printed with it. A run above
+STEAL_FLAG_PCT % steal is marked `STEAL` and listed at the end; it stays
+in the medians. Every run's result line is also kept, with its steal and
+iowait, in `<workdir>/<workload>.results.jsonl`.
 """
 import argparse
 import json
@@ -39,6 +45,21 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STEAL_FLAG_PCT = 10.0
+
+
+def cpu_times():
+    """user, nice, system, idle, iowait, irq, softirq, steal jiffies of
+    `/proc/stat`'s aggregate `cpu` line (guest time is inside user)."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:9]]
+
+
+def contention(before, after):
+    """(steal %, iowait %) of all CPU time between two `cpu_times()`."""
+    d = [b - a for a, b in zip(before, after)]
+    total = sum(d) or 1
+    return 100.0 * d[7] / total, 100.0 * d[4] / total
 
 
 def export(rev, workdir, label):
@@ -109,7 +130,7 @@ def main():
 
     dirs["control"] = dirs["parent"]
     results = {"parent": [], "change": [], "control": []}
-    flagged = []
+    flagged, contended = [], []
     log = open(os.path.join(a.workdir, f"{a.workload}.results.jsonl"), "w")
     for i in range(a.pairs):
         seed = a.seed + i
@@ -119,20 +140,29 @@ def main():
         else:
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for label in order:
+            before = cpu_times()
             r = run(dirs[label], a.workload, seed, a.seconds, a.trace)
+            steal, iowait = contention(before, cpu_times())
             ok = r is not None and r["correct"] and r["failed"] == 0
             if not ok:
                 flagged.append(f"{label} seed {seed}: " + (
                     "run failed" if r is None else
                     f"correct={r['correct']} failed={r['failed']}"))
+            stolen = steal > STEAL_FLAG_PCT
+            if stolen:
+                contended.append(f"{label} seed {seed}: steal {steal:.1f} %")
             results[label].append(r["metrics"] if r is not None else None)
             log.write(json.dumps({"rev": label, "seed": seed,
+                                  "steal_pct": round(steal, 2),
+                                  "iowait_pct": round(iowait, 2),
                                   "result": r}) + "\n")
             log.flush()
             print(f"pair {i + 1}/{a.pairs} seed {seed} {label}: " +
                   ("FAILED" if r is None else
                    " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()
                             if k in ("op_p50_ms", "op_tail_ms", "wall_s"))) +
+                  f" steal={steal:.1f}% iowait={iowait:.1f}%" +
+                  ("  <-- STEAL" if stolen else "") +
                   ("" if ok else "  <-- NOT CORRECT"), flush=True)
 
     ctl = results["control"] if a.control else [{}] * a.pairs
@@ -170,6 +200,9 @@ def main():
                      f"{f'{min(band):.3f}-{max(band):.3f}':>13} "
                      f"{abs(km - pm):>9.4g}")
         print(line)
+    if contended:
+        print(f"\nruns above {STEAL_FLAG_PCT:g} % steal (kept in the medians):"
+              "\n  " + "\n  ".join(contended))
     if flagged:
         print("\nruns not correct:\n  " + "\n  ".join(flagged))
         sys.exit(1)

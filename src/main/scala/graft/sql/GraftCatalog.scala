@@ -190,22 +190,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case ts if ts.forall(t => t.name == "identity" &&
           t.references.length == 1 &&
           t.references()(0).fieldNames().length == 1) =>
-        val cols = ts.map(_.references()(0).fieldNames()(0))
-        require(cols.distinct == cols,
-          s"duplicate partition column in: ${cols.mkString(", ")}")
-        cols.foreach { c =>
-          if (!schema.fieldNames.contains(c))
-            throw new IllegalArgumentException(s"no such partition column: $c")
-        }
-        val ord = cols.zipWithIndex.toMap
-        StructType(schema.fields.map(f => ord.get(f.name) match {
-          case Some(i) => f.copy(metadata =
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata)
-              .putBoolean(GraftTable.PartitionKey, true)
-              .putLong(GraftTable.PartitionOrdKey, i.toLong).build())
-          case None => f
-        }))
+        GraftClient.withPartitionSpec(schema,
+          ts.map(_.references()(0).fieldNames()(0)))
       case _ =>
         throw new UnsupportedOperationException(
           "graft tables support PARTITIONED BY (identity columns) only; " +
@@ -472,16 +458,6 @@ object GraftCatalog {
 }
 
 object GraftTable {
-  /** Field-metadata key marking a DDL-declared partition column
-    * (`CREATE TABLE … PARTITIONED BY (a, b)`). Rides the log's schema
-    * serialization like column mapping's physical names do.
-    */
-  val PartitionKey = GraftClient.PartitionKey
-  /** Ordinal of the column within the partition spec (absent on tables
-    * created before multi-column support ⇒ 0, the only column).
-    */
-  val PartitionOrdKey = GraftClient.PartitionOrdKey
-
   /** The table `name` under `root` as the DSv2 planner sees it — the one
     * loader behind the catalog's three `loadTable` overloads and
     * `format("graft")` batch reads. Latest: schema and properties from
@@ -565,12 +541,7 @@ final class GraftTable(val root: String, val tableName: String,
     * unpartitioned.
     */
   private[sql] def partitionCols: Seq[String] =
-    tableSchema.fields.filter(f =>
-      f.metadata.contains(GraftTable.PartitionKey) &&
-        f.metadata.getBoolean(GraftTable.PartitionKey))
-      .sortBy(f => if (f.metadata.contains(GraftTable.PartitionOrdKey))
-        f.metadata.getLong(GraftTable.PartitionOrdKey) else 0L)
-      .map(_.name).toSeq
+    GraftClient.partitionSpecOf(tableSchema)
 
   override def partitioning(): Array[Transform] = {
     val parts = partitionCols.toArray.map(c =>

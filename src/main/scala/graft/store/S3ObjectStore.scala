@@ -29,9 +29,10 @@ import java.time.Duration
   *
   * Retries: GET/LIST are idempotent and retry on connect/5xx.
   * Conditional PUT retries ONLY on 409 (documented no-effect); a
-  * transport-level failure stays ambiguous and surfaces, exactly as in
-  * [[HttpObjectStore]] — the commit protocol's read-back recovery owns
-  * that case.
+  * transport-level failure or a 5xx stays ambiguous and surfaces — a
+  * silent retry could turn "we actually won" into a false loss, and the
+  * commit protocol's read-back recovery (commitTxRetrying) owns that
+  * case.
   */
 final class S3ObjectStore(baseUrl: String, bucket: String = "graft",
     pageSize: Int = 1000,
@@ -83,7 +84,12 @@ final class S3ObjectStore(baseUrl: String, bucket: String = "graft",
   private def objUri(key: String): URI =
     URI.create(s"$base/${enc(bucket)}/${enc(key)}")
 
-  /** Per-instance cache identity (see [[HttpObjectStore.cacheKey]]). */
+  /** Per-INSTANCE cache identity, not per-endpoint: a long-lived client
+    * rolls its snapshot forward across transactions, while a fresh
+    * client (or a client of a restarted server) starts clean — an
+    * endpoint-wide key could serve phantom state after a server was
+    * rebuilt at the same host:port.
+    */
   override val cacheKey: Option[String] =
     Some(s"s3:$base/$bucket#${java.util.UUID.randomUUID()}")
 
@@ -401,18 +407,18 @@ private[store] object S3Xml {
   * full S3 implementation; against a real endpoint only the base URL
   * changes. `conflict409EveryNth` > 0 makes every Nth conditional PUT
   * answer 409 WITHOUT effect (the throttled-conditional-write reality
-  * the client's bounded retry must absorb).
+  * the client's bounded retry must absorb). Atomicity of the
+  * conditional PUT is the backing store's — the server adds no locking
+  * of its own, exactly as S3's API surfaces its internal
+  * conditional-write primitive.
   *
-  * The server runs with TCP_NODELAY on ([[StoreHttp]]): with Nagle on, a
-  * GET or LIST answer's body waited for the client's delayed ACK, 44 ms
-  * per call on loopback against 1.7 ms without it.
+  * It runs on the JDK's `HttpServer` at 127.0.0.1:`port` (0 binds a free
+  * port) with an 8-thread executor; a handler that throws answers 500.
   */
 final class S3DialectServer(backing: ObjectStore, port: Int = 0,
     bucket: String = "graft", conflict409EveryNth: Int = 0,
-    requireAuth: Option[String] = None,
     requireSigV4: Option[(String, String, String)] = None) {
-  import com.sun.net.httpserver.HttpExchange
-  import StoreHttp.respond
+  import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
   private val condPuts = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -499,18 +505,12 @@ final class S3DialectServer(backing: ObjectStore, port: Int = 0,
     // the body is read ONCE up front: SigV4 verification hashes it,
     // and the PUT branch stores the same bytes
     val body = x.getRequestBody.readAllBytes()
-    // auth enforcement (the real-endpoint shape the client's `sign`
-    // hook exists for): EVERY request must carry the expected
-    // Authorization header or gets S3's 403 — list, read, write,
-    // conditional create and delete alike
-    requireAuth.foreach { expect =>
-      if (!Option(x.getRequestHeaders.getFirst("Authorization"))
-          .contains(expect)) {
-        respond(x, 403, Array.empty); return
-      }
-    }
+    // EVERY verb is verified — list, read, write, conditional create
+    // and delete alike get S3's 403 without a valid signature
     if (!sigV4Valid(x, body)) { respond(x, 403, Array.empty); return }
-    // raw path (no double-decode — see ObjectStoreHttpServer)
+    // getRawPath, NOT getPath: getPath already percent-decodes, and a
+    // second decode would collide 'a%20b' with 'a b' — a wrong
+    // conditional-put verdict on the one primitive the commit log needs
     val segs = x.getRequestURI.getRawPath.stripPrefix("/")
       .split("/", 2).toSeq.map(dec)
     if (segs.headOption.forall(_ != bucket)) {
@@ -553,9 +553,44 @@ final class S3DialectServer(backing: ObjectStore, port: Int = 0,
     }
   }
 
-  private val server = StoreHttp.serve(port, "/" -> handle)
+  /** Answer `x` with `code`, `headers` and `body` (no body when empty). */
+  private def respond(x: HttpExchange, code: Int, body: Array[Byte],
+      headers: (String, String)*): Unit = {
+    headers.foreach { case (k, v) => x.getResponseHeaders.set(k, v) }
+    x.sendResponseHeaders(code, if (body.isEmpty) -1 else body.length.toLong)
+    if (body.nonEmpty) x.getResponseBody.write(body)
+    x.close()
+  }
 
-  def boundPort: Int = server.boundPort
-  def url: String = server.url
-  def stop(): Unit = server.stop()
+  private val executor = java.util.concurrent.Executors.newFixedThreadPool(8)
+  private val server = {
+    // TCP_NODELAY on. The JDK server leaves Nagle's algorithm on unless
+    // this property is set before its `ServerConfig` class loads, which
+    // happens once per JVM, at the first `HttpServer.create`.
+    // `sendResponseHeaders` flushes the headers, so a response body goes
+    // out as a second small segment, which Nagle holds until the
+    // client's delayed ACK (40 ms on Linux). A 200-call loopback probe
+    // measured GET and LIST at 44 ms per call with Nagle on and 1.7 ms
+    // with it off; PUT and DELETE, which answer with no body, took about
+    // 1 ms either way.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    val s = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", port), 0)
+    s.createContext("/", (x: HttpExchange) =>
+      try handle(x)
+      catch {
+        case scala.util.control.NonFatal(_) => respond(x, 500, Array.empty)
+      })
+    s.setExecutor(executor)
+    s.start()
+    s
+  }
+
+  /** The bound port (when constructed with port = 0). */
+  def boundPort: Int = server.getAddress.getPort
+  def url: String = s"http://127.0.0.1:$boundPort"
+  // HttpServer.stop does NOT stop a caller-supplied executor — without
+  // the shutdown each server instance leaks 8 non-daemon threads that
+  // keep a forked JVM alive after main() returns
+  def stop(): Unit = { server.stop(0); executor.shutdown() }
 }

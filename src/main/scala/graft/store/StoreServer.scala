@@ -2,17 +2,17 @@ package graft.store
 
 /** Runnable object-store service — the reference's "run as server" TODO
   * (README.md:31) made concrete: the store tier as a standalone network
-  * service speaking the [[HttpObjectStore]] wire protocol, with all
+  * service speaking the S3 REST dialect ([[S3DialectServer]]), with all
   * table/transaction logic living in the clients (exactly the S3
-  * deployment split). Any number of [[graft.table.GraftClient]]s on any
-  * machines point their `logStore` at this endpoint and the commit
-  * protocol's conditional puts linearize here.
+  * deployment split). Any number of [[graft.table.GraftClient]]s point
+  * their `logStore` at this endpoint and the commit protocol's
+  * conditional puts linearize here.
   *
   * {{{
   * sbt "runMain graft.store.StoreServer /data/graft-log 8080"
   * // clients:
   * new GraftClient(spark, dataRoot,
-  *   logStore = Some(new HttpObjectStore("http://host:8080")))
+  *   logStore = Some(new S3ObjectStore("http://host:8080")))
   * }}}
   *
   * Port 0 picks a free port (printed). The backing store is the
@@ -25,7 +25,7 @@ object StoreServer {
       "usage: StoreServer <store-root-dir> [port (default 8080)]")
     val root = args(0)
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val server = new ObjectStoreHttpServer(new LocalObjectStore(root), port)
+    val server = new S3DialectServer(new LocalObjectStore(root), port)
     println(s"graft store server: ${server.url} -> $root")
     // park the main thread; the JDK server's executor threads serve
     Thread.currentThread().join()

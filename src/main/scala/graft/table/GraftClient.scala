@@ -70,12 +70,24 @@ final class GraftClient(
     * al., where rename = copy + delete) graft pays exactly 1× write I/O
     * for every byte it lays out (RemoteFsSpec pins rename-freedom on a
     * rename-refusing scheme).
+    *
+    * Without a `logStore` the log sits in `rootDir` on the local disk:
+    * a plain path or a `file:` URI. Any other scheme needs a `logStore`
+    * and is refused here, rather than logging into a relative directory
+    * named after the scheme while the data goes to the scheme.
     */
-  val store: ObjectStore = logStore.getOrElse(new LocalObjectStore(rootDir))
+  private val rootPath = new org.apache.hadoop.fs.Path(rootDir)
+  val store: ObjectStore = logStore.getOrElse(
+    Option(rootPath.toUri.getScheme) match {
+      case None => new LocalObjectStore(rootDir)
+      case Some("file") => new LocalObjectStore(rootPath.toUri.getPath)
+      case Some(scheme) => throw new IllegalArgumentException(
+        s"root $rootDir is on the '$scheme' scheme: its log cannot sit " +
+          "on the local disk; pass a logStore")
+    })
   private val txLog = new TxLog(store)
 
   // ---- data-plane filesystem (Hadoop FS, scheme-resolved) --------------
-  private val rootPath = new org.apache.hadoop.fs.Path(rootDir)
   private lazy val dataFs: org.apache.hadoop.fs.FileSystem =
     rootPath.getFileSystem(spark.sessionState.newHadoopConf())
   /** rootDir-relative name -> Path on the data filesystem. */
@@ -696,23 +708,8 @@ final class GraftClient(
     */
   def alterPartitioning(table: String, partCols: Seq[String]): Unit = {
     tagOp("ALTER")
-    import GraftClient.{PartitionKey, PartitionOrdKey}
     val t = currentTx
-    val schema = schemaOf(table)
-    require(partCols.distinct == partCols,
-      s"duplicate partition column in: ${partCols.mkString(", ")}")
-    partCols.foreach(c => require(schema.fieldNames.contains(c),
-      s"no such column: $c"))
-    val ord = partCols.zipWithIndex.toMap
-    val respecced = StructType(schema.fields.map { f =>
-      val b = new MetadataBuilder().withMetadata(f.metadata)
-        .remove(PartitionKey).remove(PartitionOrdKey)
-      ord.get(f.name).foreach { i =>
-        b.putBoolean(PartitionKey, true)
-        b.putLong(PartitionOrdKey, i.toLong)
-      }
-      f.copy(metadata = b.build())
-    })
+    val respecced = GraftClient.withPartitionSpec(schemaOf(table), partCols)
     t.tables(table) = respecced
     t.actions += ChangeMetadata(table, respecced)
   }
@@ -859,15 +856,8 @@ final class GraftClient(
     * inserts the way the SQL catalog does:
     * `insertPartitioned(t, df, declaredPartitioning(t))`.
     */
-  def declaredPartitioning(table: String): Seq[String] = {
-    import GraftClient.{PartitionKey, PartitionOrdKey}
-    schemaOf(table).fields
-      .filter(f => f.metadata.contains(PartitionKey) &&
-        f.metadata.getBoolean(PartitionKey))
-      .sortBy(f => if (f.metadata.contains(PartitionOrdKey))
-        f.metadata.getLong(PartitionOrdKey) else 0L)
-      .map(_.name).toSeq
-  }
+  def declaredPartitioning(table: String): Seq[String] =
+    GraftClient.partitionSpecOf(schemaOf(table))
 
   /** Bake the logical schema back into the files: rewrite every live
     * object with physical == logical column names, dropping the bytes of
@@ -6559,11 +6549,41 @@ object GraftClient {
     * both write it; it rides the log's schema serialization like column
     * mapping's physical names do).
     */
-  val PartitionKey = "graftPartition"
+  private val PartitionKey = "graftPartition"
   /** Ordinal of the column within the partition spec (absent on tables
     * created before multi-column support ⇒ 0, the only column).
     */
-  val PartitionOrdKey = "graftPartitionOrd"
+  private val PartitionOrdKey = "graftPartitionOrd"
+
+  /** The partition spec `schema`'s field markers declare, in spec
+    * order; empty when unpartitioned. The one reader of the markers.
+    */
+  def partitionSpecOf(schema: StructType): Seq[String] =
+    schema.fields.filter(f => f.metadata.contains(PartitionKey) &&
+        f.metadata.getBoolean(PartitionKey))
+      .sortBy(f => if (f.metadata.contains(PartitionOrdKey))
+        f.metadata.getLong(PartitionOrdKey) else 0L)
+      .map(_.name).toSeq
+
+  /** `schema` with `cols` as its partition spec: the markers on `cols`,
+    * in order, and on no other field. The one writer of the markers.
+    */
+  def withPartitionSpec(schema: StructType, cols: Seq[String]): StructType = {
+    require(cols.distinct == cols,
+      s"duplicate partition column in: ${cols.mkString(", ")}")
+    cols.foreach(c => require(schema.fieldNames.contains(c),
+      s"no such partition column: $c"))
+    val ord = cols.zipWithIndex.toMap
+    StructType(schema.fields.map { f =>
+      val b = new MetadataBuilder().withMetadata(f.metadata)
+        .remove(PartitionKey).remove(PartitionOrdKey)
+      ord.get(f.name).foreach { i =>
+        b.putBoolean(PartitionKey, true)
+        b.putLong(PartitionOrdKey, i.toLong)
+      }
+      f.copy(metadata = b.build())
+    })
+  }
 
   /** Field-metadata key holding a generated column's SQL expression
     * (Delta's `GENERATED ALWAYS AS` semantics) — set by

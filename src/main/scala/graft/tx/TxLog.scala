@@ -1179,7 +1179,7 @@ object TxLog {
     */
   private[tx] final case class CachedSnap(ckptBase: Long, applied: Int,
       snap: Snapshot)
-  /** Bounded LRU: per-instance cache keys (e.g. [[graft.store.HttpObjectStore]]
+  /** Bounded LRU: per-instance cache keys (e.g. [[graft.store.S3ObjectStore]]
     * mints a fresh UUID per store object) would otherwise pin one full
     * action vector per constructed store for the life of the JVM —
     * patterns that build a store per operation (as the SQL catalog builds

@@ -19,16 +19,11 @@ object RaceChildMain {
     val root = args(0)
     val n = args(1).toInt
     // optional third arg: an http://… endpoint — the LOG then crosses a
-    // real socket to the parent's ObjectStoreHttpServer while parquet
+    // real socket to the parent's S3DialectServer (200-on-create
+    // conditional PUTs, ListObjectsV2 token pagination) while parquet
     // data shares the filesystem root (the S3-deployment split, now
-    // ALSO across a process boundary). An `s3+http://…` form selects
-    // the S3 REST dialect instead (200-on-create conditional PUTs,
-    // ListObjectsV2 token pagination).
-    val logStore = args.lift(2).map {
-      case url if url.startsWith("s3+") =>
-        new graft.store.S3ObjectStore(url.stripPrefix("s3+"))
-      case url => new graft.store.HttpObjectStore(url)
-    }
+    // ALSO across a process boundary)
+    val logStore = args.lift(2).map(new graft.store.S3ObjectStore(_))
     val spark = GraftSession.builder(2).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -349,4 +349,30 @@ class RemoteFsSpec extends AnyFunSuite {
     assert(c.currentState("m", Seq("k")).count() == 131)
     c.rollback()
   }
+
+  test("a file: root logs on local disk; any other scheme without a " +
+    "logStore is refused, and neither leaves a directory named after " +
+    "its scheme in the working directory") {
+    val ss = spark
+    import ss.implicits._
+    val local = Files.createTempDirectory("graft_file_root").toString
+    val c = new GraftClient(ss, s"file:$local")
+    c.newTx()
+    c.createTable("t", StructType(Seq(StructField("k", IntegerType))))
+    c.insert("t", Seq(1, 2).toDF("k"))
+    c.commitTx()
+    // the log sits in the root itself: a plain-path client replays it
+    val plain = new GraftClient(ss, local)
+    plain.newTx()
+    try assert(plain.scan("t").count() == 2L)
+    finally plain.rollback()
+
+    val e = intercept[IllegalArgumentException](
+      new GraftClient(ss, s"graftnolog:$local"))
+    assert(e.getMessage.contains("'graftnolog'") &&
+      e.getMessage.contains("logStore"), e.getMessage)
+    Seq("file:", "graftnolog:").foreach(d =>
+      assert(!Files.exists(java.nio.file.Paths.get(d)),
+        s"a directory named $d appeared in the working directory"))
+  }
 }

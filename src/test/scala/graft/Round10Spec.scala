@@ -6,16 +6,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{HttpObjectStore, InMemoryObjectStore, LocalObjectStore, ObjectStore}
+import graft.store.{InMemoryObjectStore, ObjectStore}
 import graft.table.GraftClient
 import graft.tx.TxLog
 
 /** Round-10 hardening pins: abortAndClean must never delete COMMITTED
   * object paths staged as maintenance amendments; the snapshot cache is
-  * bounded (per-instance cache keys cannot leak heap); a conditional PUT
-  * answered 200 (If-None-Match stripped in transit) surfaces as an
-  * error instead of a false win; changesByFile pages wide commit windows
-  * through a parquet spill so plan depth stays bounded; and the
+  * bounded (per-instance cache keys cannot leak heap); changesByFile
+  * pages wide commit windows through a parquet spill so plan depth
+  * stays bounded; and the
   * change-feed streaming sources accept startingVersion /
   * startingTimestamp so a stream can begin past a pruned log head.
   */
@@ -93,31 +92,6 @@ class Round10Spec extends AnyFunSuite {
     assert(TxLog.snapshotCacheSize <= 64,
       s"cache grew to ${TxLog.snapshotCacheSize} entries")
     TxLog.clearSnapshotCache()
-  }
-
-  // ---------------------------------------------------------------- //
-  // conditional PUT answered 200 = ambiguity, not a win (ADVICE r9)
-  // ---------------------------------------------------------------- //
-
-  test("HttpObjectStore treats 200 on a conditional PUT as an error " +
-    "(If-None-Match stripped in transit), never a win") {
-    // a server that IGNORES If-None-Match: answers 200 to every PUT —
-    // the behavior of an intermediary that dropped the header. Made
-    // through the shared factory: the first JDK server of the JVM fixes
-    // the nodelay setting for every later one.
-    import com.sun.net.httpserver.HttpExchange
-    import graft.store.StoreHttp
-    val srv = StoreHttp.serve(0, "/o/" -> { (x: HttpExchange) =>
-      x.getRequestBody.readAllBytes()
-      StoreHttp.respond(x, 200, Array.empty)
-    })
-    try {
-      val s = new HttpObjectStore(srv.url)
-      val e = intercept[java.io.IOException](
-        s.putIfAbsent("_log_00000000000000000001", "x".getBytes))
-      assert(e.getMessage.contains("200"),
-        s"must surface the 200 ambiguity, got: ${e.getMessage}")
-    } finally srv.stop()
   }
 
   // ---------------------------------------------------------------- //

@@ -104,7 +104,7 @@ class S3SigV4Spec extends AnyFunSuite {
   test("loopback GET and LIST answer in milliseconds, not a delayed ACK") {
     val srv = new S3DialectServer(new InMemoryObjectStore,
       requireSigV4 = Some(("AK", "sk", "us-east-1")))
-    try HttpStoreSpec.assertFastReads(new S3ObjectStore(srv.url,
+    try S3StoreSpec.assertFastReads(new S3ObjectStore(srv.url,
       sign = S3ObjectStore.sigV4("AK", () => "sk", "us-east-1")))
     finally srv.stop()
   }

@@ -7,67 +7,33 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{HttpObjectStore, InMemoryObjectStore, LocalObjectStore, ObjectStoreHttpServer}
+import graft.store.{InMemoryObjectStore, LocalObjectStore, S3DialectServer, S3ObjectStore}
 import graft.table.GraftClient
 
 /** The networked-store story beyond the shared contract rows in
   * [[StoreContractSpec]]: the commit protocol's If-None-Match put and
-  * paged ordered LIST crossing REAL HTTP sockets (the reference's own
-  * minio/S3 TODO, README.md:30) — paging semantics, a full table
-  * lifecycle with the log on the wire, and a commit race where every
-  * conditional put is a network round-trip.
+  * paged ordered LIST crossing REAL HTTP sockets in the S3 dialect (the
+  * reference's own minio/S3 TODO, README.md:30) — a full table
+  * lifecycle with the log on the wire, a commit race where every
+  * conditional put is a network round-trip, and server-side failures
+  * surfacing as HTTP errors.
   */
-class HttpStoreSpec extends AnyFunSuite {
+class S3StoreSpec extends AnyFunSuite {
   private def spark = SparkTestSession.spark
 
-  private def withServer[A](f: (ObjectStoreHttpServer, HttpObjectStore) => A): A = {
-    val srv = new ObjectStoreHttpServer(new InMemoryObjectStore)
-    try f(srv, new HttpObjectStore(srv.url))
+  private def withServer[A](f: S3ObjectStore => A): A = {
+    val srv = new S3DialectServer(new InMemoryObjectStore)
+    try f(new S3ObjectStore(srv.url))
     finally srv.stop()
-  }
-
-  test("LIST pages through start-after; order and completeness survive") {
-    withServer { (srv, _) =>
-      // a 7-key page over 23 keys: 4 LIST round-trips, no key lost or
-      // duplicated, ascending end-to-end (S3 ListObjectsV2 shape)
-      val s = new HttpObjectStore(srv.url, pageSize = 7)
-      val keys = (0 until 23).map(i => f"_log_$i%020d")
-      scala.util.Random.shuffle(keys).foreach { k =>
-        assert(s.putIfAbsent(k, k.getBytes))
-      }
-      s.putIfAbsent("_other_x", "n".getBytes)
-      assert(s.listPrefixOrdered("_log_") == keys)
-    }
-  }
-
-  test("conditional PUT over the wire: 412 loses, winner's bytes stay") {
-    withServer { (_, s) =>
-      assert(s.putIfAbsent("_log_1", "winner".getBytes))
-      assert(!s.putIfAbsent("_log_1", "loser".getBytes))
-      assert(new String(s.read("_log_1")) == "winner")
-      intercept[java.nio.file.NoSuchFileException](s.read("_log_nope"))
-      s.delete("_log_1")
-      assert(s.putIfAbsent("_log_1", "second-life".getBytes))
-      // names with URL-special characters round-trip (the server decodes
-      // the RAW path exactly once): '%' must not 500, '+' and ' ' must
-      // not collide — a collision is a wrong conditional-put verdict
-      assert(s.putIfAbsent("_log_a%b", "pct".getBytes))
-      assert(new String(s.read("_log_a%b")) == "pct")
-      assert(s.putIfAbsent("_log_a+b", "plus".getBytes))
-      assert(s.putIfAbsent("_log_a b", "space".getBytes),
-        "'a b' must not collide with 'a+b'")
-      assert(new String(s.read("_log_a+b")) == "plus")
-      assert(new String(s.read("_log_a b")) == "space")
-    }
   }
 
   test("full client lifecycle with the log on the wire") {
     val ss = spark
     import ss.implicits._
-    withServer { (_, store) =>
+    withServer { store =>
       // data objects on local FS (parquet), every LOG operation an HTTP
       // round-trip — the deployment split a real S3-backed cluster has
-      val dir = Files.createTempDirectory("graft_http_client").toString
+      val dir = Files.createTempDirectory("graft_s3_client").toString
       val c = new GraftClient(ss, dir, logStore = Some(store))
       c.newTx()
       c.createTable("t", StructType(Seq(
@@ -101,8 +67,8 @@ class HttpStoreSpec extends AnyFunSuite {
   test("commit race through real sockets: one winner per log id") {
     val ss = spark
     import ss.implicits._
-    withServer { (_, store) =>
-      val dir = Files.createTempDirectory("graft_http_race").toString
+    withServer { store =>
+      val dir = Files.createTempDirectory("graft_s3_race").toString
       val boot = new GraftClient(ss, dir, logStore = Some(store))
       boot.newTx()
       boot.createTable("t", StructType(Seq(
@@ -144,10 +110,9 @@ class HttpStoreSpec extends AnyFunSuite {
     // through an actual socket, not a same-process throw
     val faulty = new graft.store.FaultInjectingObjectStore(
       failEveryNthPut = 5)
-    val srv = new ObjectStoreHttpServer(faulty)
+    val srv = new S3DialectServer(faulty)
     try {
-      val s = new HttpObjectStore(srv.url)
-      val schema = StructType(Seq(StructField("a", StringType)))
+      val s = new S3ObjectStore(srv.url)
       val log = new graft.tx.TxLog(s)
       var committed = 0
       var attempts = 0
@@ -178,9 +143,9 @@ class HttpStoreSpec extends AnyFunSuite {
     // classify it as own-write-landed (success), not a lost race
     val faulty = new graft.store.FaultInjectingObjectStore(
       ambiguousEveryNthPut = 1)
-    val srv = new ObjectStoreHttpServer(faulty)
+    val srv = new S3DialectServer(faulty)
     try {
-      val s = new HttpObjectStore(srv.url)
+      val s = new S3ObjectStore(srv.url)
       val log = new graft.tx.TxLog(s)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("a",
@@ -196,10 +161,10 @@ class HttpStoreSpec extends AnyFunSuite {
   test("server fronting a local-FS store: durability tier swaps freely") {
     // same wire protocol, hard-link-atomic backing — the configuration
     // a single-box deployment would run
-    val root = Files.createTempDirectory("graft_http_fs").toString
-    val srv = new ObjectStoreHttpServer(new LocalObjectStore(root))
+    val root = Files.createTempDirectory("graft_s3_fs").toString
+    val srv = new S3DialectServer(new LocalObjectStore(root))
     try {
-      val s = new HttpObjectStore(srv.url)
+      val s = new S3ObjectStore(srv.url)
       assert(s.putIfAbsent("_log_1", "x".getBytes))
       assert(!s.putIfAbsent("_log_1", "y".getBytes))
       // the object is REALLY on disk where the backing store put it
@@ -207,15 +172,9 @@ class HttpStoreSpec extends AnyFunSuite {
         java.nio.file.Paths.get(root, "_log_1"))) == "x")
     } finally srv.stop()
   }
-
-  test("loopback GET and LIST answer in milliseconds, not a delayed ACK") {
-    withServer { (_, s) =>
-      HttpStoreSpec.assertFastReads(s)
-    }
-  }
 }
 
-object HttpStoreSpec {
+object S3StoreSpec {
   /** Median ms of `n` calls of `f`, after a few warm-up calls. */
   def medianMs(n: Int)(f: => Any): Double = {
     (1 to 5).foreach(_ => f)

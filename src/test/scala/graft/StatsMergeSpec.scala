@@ -85,7 +85,7 @@ class StatsMergeSpec extends AnyFunSuite {
     // (the first few hundred calls)
     def scan() = ParquetFooters.scan(conf, objDir, kvSchema)
     (1 to 300).foreach(_ => scan())
-    val ms = HttpStoreSpec.medianMs(50)(scan())
+    val ms = S3StoreSpec.medianMs(50)(scan())
     assert(ms < 3.0, f"median footer scan $ms%.2f ms (limit 3 ms)")
   }
 

@@ -23,11 +23,6 @@ class StoreContractSpec extends AnyFunSuite {
     // latency on every verb so the contract holds with real request gaps
     "s3-model" -> (() => new FaultInjectingObjectStore(
       putLatencyMs = 2, listLatencyMs = 1, readLatencyMs = 1)),
-    // REAL sockets: conditional PUT / paged LIST as HTTP round-trips
-    "http" -> (() => {
-      val srv = new graft.store.ObjectStoreHttpServer(new InMemoryObjectStore)
-      new graft.store.HttpObjectStore(srv.url)
-    }),
     // the S3 REST dialect: 200-on-create conditional PUT, ListObjectsV2
     // XML pages via continuation tokens (pageSize=2 forces pagination in
     // every listing test), and injected 409 conflicts the client's
@@ -36,16 +31,6 @@ class StoreContractSpec extends AnyFunSuite {
       val srv = new graft.store.S3DialectServer(new InMemoryObjectStore,
         conflict409EveryNth = 5)
       new graft.store.S3ObjectStore(srv.url, pageSize = 2)
-    }),
-    // the S3 dialect behind AUTH: every request must carry the expected
-    // Authorization header (the server 403s otherwise), injected by the
-    // client's `sign` hook — the pluggable seam a real endpoint's
-    // bearer/SigV4 signing plugs into (round 13)
-    "s3-auth" -> (() => {
-      val srv = new graft.store.S3DialectServer(new InMemoryObjectStore,
-        requireAuth = Some("Bearer graft-test-token"))
-      new graft.store.S3ObjectStore(srv.url, pageSize = 2,
-        sign = _.header("Authorization", "Bearer graft-test-token"))
     }),
     // the S3 dialect behind REAL SigV4 verification (round 14): the
     // server recomputes the signature from the wire request — canonical
@@ -58,14 +43,6 @@ class StoreContractSpec extends AnyFunSuite {
       new graft.store.S3ObjectStore(srv.url, pageSize = 2,
         sign = graft.store.S3ObjectStore.sigV4("AKIDGRAFT",
           () => "graft-secret", "us-east-1"))
-    }),
-    // an S3-compatible endpoint answering 200 to a SUCCESSFUL
-    // conditional PUT over the native wire protocol — the
-    // `createdStatuses = Set(200)` opt-in reclassifies 200 as a win
-    "http-200-create" -> (() => {
-      val srv = new graft.store.ObjectStoreHttpServer(
-        new InMemoryObjectStore, createdStatus = 200)
-      new graft.store.HttpObjectStore(srv.url, createdStatuses = Set(200))
     }))
 
   impls.foreach { case (name, mk) =>
@@ -74,6 +51,11 @@ class StoreContractSpec extends AnyFunSuite {
       assert(s.putIfAbsent("a", "one".getBytes))
       assert(!s.putIfAbsent("a", "two".getBytes))
       assert(new String(s.read("a")) == "one")
+      intercept[java.nio.file.NoSuchFileException](s.read("absent"))
+      // a deleted key is free again: the next conditional put wins
+      s.delete("a")
+      assert(s.putIfAbsent("a", "three".getBytes))
+      assert(new String(s.read("a")) == "three")
     }
 
     test(s"$name: listPrefixOrdered is ascending and prefix-filtered") {
@@ -259,10 +241,10 @@ class StoreContractSpec extends AnyFunSuite {
   test("s3 dialect: an UNSIGNED client against an auth-enforcing " +
     "endpoint fails loudly on every verb — never a silent no-op") {
     val srv = new graft.store.S3DialectServer(new InMemoryObjectStore,
-      requireAuth = Some("Bearer graft-test-token"))
+      requireSigV4 = Some(("AK", "sk", "us-east-1")))
     try {
       val signed = new graft.store.S3ObjectStore(srv.url,
-        sign = _.header("Authorization", "Bearer graft-test-token"))
+        sign = graft.store.S3ObjectStore.sigV4("AK", () => "sk", "us-east-1"))
       assert(signed.putIfAbsent("k", "v".getBytes))
       val unsigned = new graft.store.S3ObjectStore(srv.url)
       intercept[java.io.IOException] { unsigned.read("k") }

@@ -6,7 +6,7 @@ import java.util.concurrent.TimeUnit
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{InMemoryObjectStore, ObjectStore, ObjectStoreHttpServer}
+import graft.store.{InMemoryObjectStore, ObjectStore, S3DialectServer, S3ObjectStore}
 import graft.table.GraftClient
 
 /** The commit protocol across PROCESS boundaries: a second JVM (forked
@@ -19,9 +19,9 @@ import graft.table.GraftClient
   *   - OS-level hard-link atomicity (Files.createLink ≙ the reference's
   *     os.Link, objectstorage/localobjectstorage.go:58) for the
   *     local-FS store, and
-  *   - a REAL network round-trip per conditional put for the HTTP
-  *     store (both JVMs' If-None-Match puts arriving at one
-  *     ObjectStoreHttpServer over sockets),
+  *   - a REAL network round-trip per conditional put for the S3
+  *     dialect (both JVMs' If-None-Match puts arriving at one
+  *     S3DialectServer over sockets),
   *
   * the semantics the reference pins in main_test.go:56-58.
   */
@@ -130,19 +130,12 @@ class TwoJvmRaceSpec extends AnyFunSuite {
     runRace(None, None)
   }
 
-  test("two JVMs race through ONE HTTP store: sockets + processes") {
-    val srv = new ObjectStoreHttpServer(new InMemoryObjectStore)
-    try runRace(Some(new graft.store.HttpObjectStore(srv.url)),
-      Some(srv.url))
-    finally srv.stop()
-  }
-
   test("two JVMs race through ONE S3-dialect store: 200-on-create " +
     "conditional PUTs + token-paginated listings across processes") {
-    val srv = new graft.store.S3DialectServer(new InMemoryObjectStore,
+    val srv = new S3DialectServer(new InMemoryObjectStore,
       conflict409EveryNth = 7)
-    try runRace(Some(new graft.store.S3ObjectStore(srv.url, pageSize = 3)),
-      Some(s"s3+${srv.url}"))
+    try runRace(Some(new S3ObjectStore(srv.url, pageSize = 3)),
+      Some(srv.url))
     finally srv.stop()
   }
 }
