@@ -35,6 +35,10 @@ over the run, build included) are printed with it. A run above
 STEAL_FLAG_PCT % steal is marked `STEAL` and listed at the end; it stays
 in the medians. Every run's result line is also kept, with its steal and
 iowait, in `<workdir>/<workload>.results.jsonl`.
+
+Each run's `run_wall_s` (the benchmark JVM's wall time, build excluded,
+from perfbench's `record:` line) is printed with it, and its median per
+revision at the end.
 """
 import argparse
 import json
@@ -80,7 +84,8 @@ def export(rev, workdir, label):
 
 def run(checkout, workload, seed, seconds, trace):
     """One perfbench run; returns its result line, or None if it failed.
-    Metric values arrive as {"value", "unit"} and are reduced to the value.
+    Metric values arrive as {"value", "unit"} and are reduced to the value;
+    `run_wall_s` is taken from the `record:` line.
     """
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
@@ -94,6 +99,9 @@ def run(checkout, workload, seed, seconds, trace):
     res = json.loads(lines[-1])
     res["metrics"] = {k: v["value"] if isinstance(v, dict) else v
                       for k, v in res["metrics"].items()}
+    records = [l[len("record: "):] for l in lines if l.startswith("record: ")]
+    if records:
+        res["run_wall_s"] = json.loads(records[-1]).get("run_wall_s")
     return res
 
 
@@ -130,6 +138,7 @@ def main():
 
     dirs["control"] = dirs["parent"]
     results = {"parent": [], "change": [], "control": []}
+    run_walls = {"parent": [], "change": [], "control": []}
     flagged, contended = [], []
     log = open(os.path.join(a.workdir, f"{a.workload}.results.jsonl"), "w")
     for i in range(a.pairs):
@@ -152,6 +161,8 @@ def main():
             if stolen:
                 contended.append(f"{label} seed {seed}: steal {steal:.1f} %")
             results[label].append(r["metrics"] if r is not None else None)
+            if r is not None and r.get("run_wall_s") is not None:
+                run_walls[label].append(r["run_wall_s"])
             log.write(json.dumps({"rev": label, "seed": seed,
                                   "steal_pct": round(steal, 2),
                                   "iowait_pct": round(iowait, 2),
@@ -160,7 +171,8 @@ def main():
             print(f"pair {i + 1}/{a.pairs} seed {seed} {label}: " +
                   ("FAILED" if r is None else
                    " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()
-                            if k in ("op_p50_ms", "op_tail_ms", "wall_s"))) +
+                            if k in ("op_p50_ms", "op_tail_ms", "wall_s")) +
+                   f" run_wall_s={r.get('run_wall_s')}") +
                   f" steal={steal:.1f}% iowait={iowait:.1f}%" +
                   ("  <-- STEAL" if stolen else "") +
                   ("" if ok else "  <-- NOT CORRECT"), flush=True)
@@ -200,6 +212,9 @@ def main():
                      f"{f'{min(band):.3f}-{max(band):.3f}':>13} "
                      f"{abs(km - pm):>9.4g}")
         print(line)
+    print("run_wall_s median: " + ", ".join(
+        f"{label} {statistics.median(w):.4g} s"
+        for label, w in run_walls.items() if w))
     if contended:
         print(f"\nruns above {STEAL_FLAG_PCT:g} % steal (kept in the medians):"
               "\n  " + "\n  ".join(contended))

@@ -373,16 +373,22 @@ object GraftBatchScan {
   private[sql] def onDiskBytes(root: String,
       files: Vector[AddDataObject]): Long = {
     if (files.isEmpty) return 0L
-    val conf =
-      SparkSession.active.sessionState.newHadoopConf()
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
     val sample = files.take(SizeSampleCap)
-    val sampled = sample.map { a =>
-      val p = new org.apache.hadoop.fs.Path(
-        if (a.path.startsWith("/")) a.path else s"$root/${a.path}")
-      try p.getFileSystem(conf).listStatus(p)
-        .filter(_.isFile).map(_.getLen).sum
-      catch { case _: java.io.FileNotFoundException => 0L }
-    }.sum
+    // graft-written objects from the part-file cache; converted external
+    // files (absolute paths) by a listing of their own
+    val (ext, internal) = sample.partition(_.path.startsWith("/"))
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val sampled = graft.table.ObjectFiles.bytes(spark,
+      rootPath.getFileSystem(conf),
+      internal.map(a => new org.apache.hadoop.fs.Path(rootPath, a.path))) +
+      ext.map { a =>
+        val p = new org.apache.hadoop.fs.Path(a.path)
+        try p.getFileSystem(conf).listStatus(p)
+          .filter(_.isFile).map(_.getLen).sum
+        catch { case _: java.io.FileNotFoundException => 0L }
+      }.sum
     if (sample.length == files.length) sampled
     else {
       val sampleRows = sample.map(_.numRows).sum.max(1L)

@@ -10,11 +10,13 @@ package graft.store
   *
   * {{{
   * sbt "runMain graft.store.StoreServer /data/graft-log 8080"
-  * // clients:
+  * // clients, on the same host:
   * new GraftClient(spark, dataRoot,
-  *   logStore = Some(new S3ObjectStore("http://host:8080")))
+  *   logStore = Some(new S3ObjectStore("http://127.0.0.1:8080")))
   * }}}
   *
+  * The server binds the loopback address (127.0.0.1) only, so only
+  * clients on its own host can reach it; the startup line says so.
   * Port 0 picks a free port (printed). The backing store is the
   * hard-link-atomic local-FS implementation, so durability is the
   * filesystem's; swap in any [[ObjectStore]] programmatically.
@@ -26,7 +28,7 @@ object StoreServer {
     val root = args(0)
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val server = new S3DialectServer(new LocalObjectStore(root), port)
-    println(s"graft store server: ${server.url} -> $root")
+    println(s"graft store server (loopback only): ${server.url} -> $root")
     // park the main thread; the JDK server's executor threads serve
     Thread.currentThread().join()
   }

@@ -99,7 +99,8 @@ final class GraftClient(
     try dataFs.listStatus(p).toSeq
     catch { case _: java.io.FileNotFoundException => Nil }
   private def deletePath(p: org.apache.hadoop.fs.Path): Unit = {
-    dataFs.delete(p, true); ()
+    dataFs.delete(p, true)
+    ObjectFiles.evict(dataFs, p)
   }
   /** One distributed parquet write whose objects land DIRECTLY at their
     * final `_table_<t>_<uuid>` names — the rename-free committer
@@ -171,12 +172,13 @@ final class GraftClient(
     */
   private lazy val externalConf = spark.sessionState.newHadoopConf()
 
-  /** Every read of a LOG-GOVERNED object (data objects, deletion
-    * vectors, CDC objects, CDF spill pages, replication bundles) pins
-    * `ignoreMissingFiles=false` AT THE SOURCE, overriding the session
-    * conf. Clusters running object stores commonly set
-    * `spark.sql.files.ignoreMissingFiles=true` to survive stray
-    * listings — under that conf a file reclaimed mid-scan (vacuum past
+  /** Every read of a LOG-GOVERNED file pins `ignoreMissingFiles=false`
+    * AT THE SOURCE, overriding the session conf: graft-written objects
+    * through [[readObjectDirs]], the user files a log entry names
+    * (COPY INTO landing files, converted external files, replication
+    * bundles) through this reader. Clusters running object stores
+    * commonly set `spark.sql.files.ignoreMissingFiles=true` to survive
+    * stray listings — under that conf a file reclaimed mid-scan (vacuum past
     * the reader's snapshot) would SILENTLY corrupt the read: a missing
     * deletion vector un-deletes its rows, a missing data object drops
     * its rows, a missing spill page truncates a change feed. The
@@ -186,6 +188,22 @@ final class GraftClient(
     */
   private def strictRead: org.apache.spark.sql.DataFrameReader =
     spark.read.option("ignoreMissingFiles", "false")
+
+  /** The rows of the graft-written objects `rels` (rootDir-relative
+    * names), read with `schema` through [[ObjectFiles]]: planned from the
+    * cached part-file listings, under the same strict contract as
+    * [[strictRead]], and failing loudly when an object is gone.
+    */
+  private def readObjectDirs(rels: Seq[String], schema: StructType): DataFrame =
+    ObjectFiles.read(spark, dataFs, rels.map(dataPath), schema)
+
+  /** The `_tx_id`/`_row_idx` provenance keys of the objects `rels`
+    * (deletion vectors, or a rewrite's survivor objects).
+    */
+  private def readProvKeys(rels: Seq[String]): DataFrame =
+    readObjectDirs(rels, StructType(Seq(
+      StructField(TxIdCol, LongType, nullable = false),
+      StructField(RowIdxCol, LongType, nullable = false))))
 
   val TxIdCol = "_tx_id"
   val RowIdxCol = "_row_idx"
@@ -1434,8 +1452,7 @@ final class GraftClient(
     val (ext, internal) = adds.partition(_.rowBase.isDefined)
     val pieces = Seq(
       if (internal.isEmpty) None else Some {
-        val df = strictRead.schema(pSchema)
-          .parquet(internal.map(a => s"$rootDir/${a.path}"): _*)
+        val df = readObjectDirs(internal.map(_.path), pSchema)
         (if (tagObj) df.withColumn("_obj",
           regexp_extract(input_file_name(), "/([^/]+)/[^/]+$", 1))
          else df).select(outCols.map(col): _*)
@@ -2050,11 +2067,7 @@ final class GraftClient(
       df.filter(SqlShim.column(NotDeleted(UnresolvedAttribute.quoted(TxIdCol),
         UnresolvedAttribute.quoted(RowIdxCol), mask)))
     } else {
-      val keys = strictRead
-        .schema(StructType(Seq(
-          StructField(TxIdCol, LongType, nullable = false),
-          StructField(RowIdxCol, LongType, nullable = false))))
-        .parquet(dvs.map(d => s"$rootDir/${d.path}"): _*)
+      val keys = readProvKeys(dvs.map(_.path))
       df.join(keys, Seq(TxIdCol, RowIdxCol), "left_anti")
         // a USING join fronts the key columns; restore the scan layout
         .select(df.columns.map(col).toIndexedSeq: _*)
@@ -2995,10 +3008,7 @@ final class GraftClient(
       if (dvObjs.nonEmpty) {
         // both the CDC record and the update images come from read-back
         // of the persisted DV keys: one authoritative affected-row set
-        val dvKeys = strictRead.schema(StructType(Seq(
-          StructField(TxIdCol, LongType, nullable = false),
-          StructField(RowIdxCol, LongType, nullable = false))))
-          .parquet(dvObjs.map(o => s"$rootDir/${o._1}"): _*)
+        val dvKeys = readProvKeys(dvObjs.map(_._1))
         val doomed = live.join(dvKeys, Seq(TxIdCol, RowIdxCol),
           "left_semi")
         if (cdfEnabled(t, table)) writeCdc(table, doomed, "delete")
@@ -3135,9 +3145,13 @@ final class GraftClient(
     if (!pure) None
     else {
       t.readTables += table
-      val paths = files.map(a =>
-        if (a.rowBase.isDefined) a.path else s"$rootDir/${a.path}")
-      Some(strictRead.schema(required).parquet(paths: _*))
+      val (ext, internal) = files.partition(_.rowBase.isDefined)
+      Some(Seq(
+        Option.when(internal.nonEmpty)(
+          readObjectDirs(internal.map(_.path), required)),
+        Option.when(ext.nonEmpty)(
+          strictRead.schema(required).parquet(ext.map(_.path): _*))
+      ).flatten.reduce(_ union _))
     }
   }
 
@@ -3197,11 +3211,7 @@ final class GraftClient(
           // the upserted/inserted new images mirror via the insert
           // hook, which fires because this marked the table CDC-touched
           if (cdfEnabled(t, table))
-            writeCdc(table, live.join(
-              strictRead.schema(StructType(Seq(
-                StructField(TxIdCol, LongType, nullable = false),
-                StructField(RowIdxCol, LongType, nullable = false))))
-                .parquet(dvObjs.map(o => s"$rootDir/${o._1}"): _*),
+            writeCdc(table, live.join(readProvKeys(dvObjs.map(_._1)),
               Seq(TxIdCol, RowIdxCol), "left_semi"), "delete")
         }
       }
@@ -3517,8 +3527,7 @@ final class GraftClient(
           // doesn't change what was recorded
           val cdcSchema = StructType(atV.fields :+
             StructField(GraftClient.ChangeTypeCol, StringType))
-          Some(aligned(strictRead.schema(cdcSchema)
-            .parquet(cdc.map(c => s"$rootDir/${c.path}"): _*)))
+          Some(aligned(readObjectDirs(cdc.map(_.path), cdcSchema)))
         } else if (added.nonEmpty && removed.isEmpty && newDvs.isEmpty) {
           Some(aligned(applyDefaults(atV, readObjects(atV, added))
             .withColumn(GraftClient.ChangeTypeCol, lit("insert"))))
@@ -3585,9 +3594,9 @@ final class GraftClient(
       val written = pieces.grouped(pageSize).flatMap { page =>
         DirectWrite.write(page.reduce(_ unionByName _), rootDir, Nil,
           DirectWrite.prefixNamer(rel))
-      }.map { case (_, name) => s"$rootDir/$name" }.toVector
+      }.map(_._2).toVector
       if (written.isEmpty) spark.createDataFrame(List.empty[Row].asJava, empty)
-      else strictRead.schema(empty).parquet(written: _*)
+      else readObjectDirs(written, empty)
     }
   }
 
@@ -3705,10 +3714,7 @@ final class GraftClient(
           t.snapshot.liveDvs(table, t.actions.toSeq)))
         val deleted =
           if (survivorPaths.nonEmpty) {
-            val survProv = strictRead.schema(StructType(Seq(
-                StructField(TxIdCol, LongType, nullable = false),
-                StructField(RowIdxCol, LongType, nullable = false))))
-              .parquet(survivorPaths.map(p => s"$rootDir/$p"): _*)
+            val survProv = readProvKeys(survivorPaths)
             live.join(survProv, Seq(TxIdCol, RowIdxCol), "left_anti")
           } else live // every touched object fully matched
         writeCdc(table, deleted, "delete")
@@ -3787,11 +3793,7 @@ final class GraftClient(
     val dvs = t.snapshot.liveDvs(table, t.actions.toSeq)
     if (dvs.nonEmpty) {
       val dvBcast = dvs.map(_.numRows).sum <= broadcastKeyRowGate
-      val dvKeys = strictRead
-        .schema(StructType(Seq(
-          StructField(TxIdCol, LongType, nullable = false),
-          StructField(RowIdxCol, LongType, nullable = false))))
-        .parquet(dvs.map(d => s"$rootDir/${d.path}"): _*)
+      val dvKeys = readProvKeys(dvs.map(_.path))
       val removedMasked = applyDefaults(schema,
           readObjects(schema, touched.map(byName)))
         .filter(pred)
@@ -4056,11 +4058,7 @@ final class GraftClient(
       // predicate re-evaluation: the feed names exactly the rows the DV
       // masks, even under a non-deterministic predicate
       if (cdfEnabled(t, table))
-        writeCdc(table, live.join(
-          strictRead.schema(StructType(Seq(
-            StructField(TxIdCol, LongType, nullable = false),
-            StructField(RowIdxCol, LongType, nullable = false))))
-            .parquet(dvObjs.map(o => s"$rootDir/${o._1}"): _*),
+        writeCdc(table, live.join(readProvKeys(dvObjs.map(_._1)),
           Seq(TxIdCol, RowIdxCol), "left_semi"), "delete")
     }
   }

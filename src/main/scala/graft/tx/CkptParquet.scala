@@ -8,7 +8,7 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, OutputFile, PositionOutputStream, SeekableInputStream}
 import org.apache.parquet.schema.MessageTypeParser
 
 /** PARQUET checkpoint parts (Delta moved its checkpoints from JSON to
@@ -23,10 +23,11 @@ import org.apache.parquet.schema.MessageTypeParser
   * not O(objects)) ride whole as one JSON `body` column.
   *
   * Parts are written through the [[graft.store.ObjectStore]] byte API
-  * (the log plane's only contract), so the encode/decode stages through
-  * a driver-local scratch file — parquet needs a seekable stream, and
-  * a part is ≤ maxPartBytes by construction, so the scratch is bounded.
-  * No Spark session is involved: checkpoints must be writable from any
+  * (the log plane's only contract), so each part is encoded into and
+  * decoded from a byte array in memory — a part is ≤ maxPartBytes by
+  * construction, so the buffer is bounded. No file system is touched
+  * (no scratch file, no checksum sibling, no `chmod`), and no Spark
+  * session is involved: checkpoints must be writable from any
   * log-plane context (maintenance procedures, the commit hook).
   *
   * Legacy JSON checkpoints (multi-part and single-object) stay
@@ -102,88 +103,101 @@ private[tx] object CkptParquet {
       c -> java.util.Base64.getDecoder.decode(s.asStr)
     }
 
-  def write(actions: Seq[Action]): Array[Byte] = {
-    val tmp = java.nio.file.Files.createTempFile("graft_ckpt_w", ".parquet")
-    java.nio.file.Files.delete(tmp) // the writer requires a fresh path
-    try {
-      val conf = freshConf()
-      GroupWriteSupport.setSchema(Schema, conf)
-      // scheme-qualified scratch path: a bare string Path resolves
-      // against fs.defaultFS (hdfs://, s3a:// on cluster configs) while
-      // the java.nio half of this method reads the LOCAL file — the
-      // file: URI pins both halves to the same filesystem
-      val w = ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(tmp.toUri))
-        .withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-      val f = new SimpleGroupFactory(Schema)
-      try actions.foreach { a =>
-        val g = f.newGroup()
-        a match {
-          case AddDataObject(t, p, tx, n, stats, blooms, rowBase, ndv,
-              refs) =>
-            g.append("kind", "add").append("tbl", t).append("path", p)
-            g.append("txId", tx).append("numRows", n)
-            rowBase.foreach(b => g.append("rowBase", b))
-            if (stats.nonEmpty)
-              g.append("stats", Json.write(TxLog.statsToJson(stats)))
-            if (blooms.nonEmpty)
-              g.append("blooms", Json.write(TxLog.bloomsToJson(blooms)))
-            if (ndv.nonEmpty)
-              g.append("ndv", Json.write(ndvToJson(ndv)))
-            if (refs.nonEmpty)
-              g.append("bloomRefs",
-                Json.write(TxLog.bloomRefsToJson(refs)))
-          case AddDeleteVector(t, p, tx, n) =>
-            g.append("kind", "dv").append("tbl", t).append("path", p)
-            g.append("txId", tx).append("numRows", n)
-          case AddCdcObject(t, p, tx, n) =>
-            g.append("kind", "cdc").append("tbl", t).append("path", p)
-            g.append("txId", tx).append("numRows", n)
-          case other =>
-            g.append("kind", "other")
-            g.append("body", Json.write(TxLog.actionToJson(other)))
-        }
-        w.write(g)
-      } finally w.close()
-      java.nio.file.Files.readAllBytes(tmp)
-    } finally {
-      java.nio.file.Files.deleteIfExists(tmp)
-      // the writer goes through Hadoop's checksummed LocalFileSystem,
-      // which drops a `.<name>.crc` sibling the nio delete above knows
-      // nothing about — without this a long-lived driver leaks one tmp
-      // file per checkpoint part
-      java.nio.file.Files.deleteIfExists(
-        tmp.resolveSibling("." + tmp.getFileName.toString + ".crc"))
+  /** A parquet file written into memory. */
+  private final class BytesOutputFile extends OutputFile {
+    val bytes = new java.io.ByteArrayOutputStream()
+    private def stream: PositionOutputStream = new PositionOutputStream {
+      override def getPos: Long = bytes.size.toLong
+      override def write(b: Int): Unit = bytes.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        bytes.write(b, off, len)
+    }
+    override def create(blockSizeHint: Long): PositionOutputStream = stream
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = {
+      bytes.reset()
+      stream
+    }
+    override def supportsBlockSize(): Boolean = false
+    override def defaultBlockSize(): Long = 0L
+  }
+
+  private final class SeekableBytes(bytes: Array[Byte])
+      extends java.io.ByteArrayInputStream(bytes) {
+    def position: Long = pos.toLong
+    def seekTo(p: Long): Unit = pos = p.toInt
+  }
+
+  /** A parquet file read from memory. */
+  private final class BytesInputFile(bytes: Array[Byte]) extends InputFile {
+    override def getLength: Long = bytes.length.toLong
+    override def newStream(): SeekableInputStream = {
+      val in = new SeekableBytes(bytes)
+      new DelegatingSeekableInputStream(in) {
+        override def getPos: Long = in.position
+        override def seek(p: Long): Unit = in.seekTo(p)
+      }
     }
   }
 
+  def write(actions: Seq[Action]): Array[Byte] = {
+    val out = new BytesOutputFile
+    val conf = freshConf()
+    GroupWriteSupport.setSchema(Schema, conf)
+    val w = ExampleParquetWriter.builder(out)
+      .withConf(conf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    val f = new SimpleGroupFactory(Schema)
+    try actions.foreach { a =>
+      val g = f.newGroup()
+      a match {
+        case AddDataObject(t, p, tx, n, stats, blooms, rowBase, ndv,
+            refs) =>
+          g.append("kind", "add").append("tbl", t).append("path", p)
+          g.append("txId", tx).append("numRows", n)
+          rowBase.foreach(b => g.append("rowBase", b))
+          if (stats.nonEmpty)
+            g.append("stats", Json.write(TxLog.statsToJson(stats)))
+          if (blooms.nonEmpty)
+            g.append("blooms", Json.write(TxLog.bloomsToJson(blooms)))
+          if (ndv.nonEmpty)
+            g.append("ndv", Json.write(ndvToJson(ndv)))
+          if (refs.nonEmpty)
+            g.append("bloomRefs",
+              Json.write(TxLog.bloomRefsToJson(refs)))
+        case AddDeleteVector(t, p, tx, n) =>
+          g.append("kind", "dv").append("tbl", t).append("path", p)
+          g.append("txId", tx).append("numRows", n)
+        case AddCdcObject(t, p, tx, n) =>
+          g.append("kind", "cdc").append("tbl", t).append("path", p)
+          g.append("txId", tx).append("numRows", n)
+        case other =>
+          g.append("kind", "other")
+          g.append("body", Json.write(TxLog.actionToJson(other)))
+      }
+      w.write(g)
+    } finally w.close()
+    out.bytes.toByteArray
+  }
+
   def read(bytes: Array[Byte]): Vector[Action] = {
-    val tmp = java.nio.file.Files.createTempFile("graft_ckpt_r", ".parquet")
+    // the InputFile builder, not `ParquetReader.builder(support, path)`:
+    // that one reads options from a `new Configuration()` of its own
+    // before `withConf` can replace it, reloading the defaults
+    val reader = new ParquetReader.Builder[Group](new BytesInputFile(bytes),
+        new HadoopParquetConfiguration(freshConf())) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }.build()
+    val out = Vector.newBuilder[Action]
     try {
-      java.nio.file.Files.write(tmp, bytes)
-      val conf = freshConf()
-      // the InputFile builder, not `ParquetReader.builder(support, path)`:
-      // that one reads options from a `new Configuration()` of its own
-      // before `withConf` can replace it, reloading the defaults
-      val file = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(tmp.toUri), conf) // file:-pinned, as in write
-      val reader = new ParquetReader.Builder[Group](file,
-          new HadoopParquetConfiguration(conf)) {
-        override protected def getReadSupport(): ReadSupport[Group] =
-          new GroupReadSupport()
-      }.build()
-      val out = Vector.newBuilder[Action]
-      try {
-        var g = reader.read()
-        while (g != null) {
-          out += fromGroup(g)
-          g = reader.read()
-        }
-      } finally reader.close()
-      out.result()
-    } finally java.nio.file.Files.deleteIfExists(tmp)
+      var g = reader.read()
+      while (g != null) {
+        out += fromGroup(g)
+        g = reader.read()
+      }
+    } finally reader.close()
+    out.result()
   }
 
   private def optS(g: Group, field: String): Option[String] =

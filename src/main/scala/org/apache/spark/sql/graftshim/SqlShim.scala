@@ -28,6 +28,12 @@ object SqlShim {
 
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** `schema` with every field nullable, at any depth: the data schema
+    * a file relation is planned with, as `DataSource` plans it (a part
+    * file written before a column existed reads it as null).
+    */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
   /** The DataFrame's physical `RDD[InternalRow]`, guaranteed executable
     * from a foreign task (the SQL catalog's native DSv2 `Batch` wraps
     * each partition in an `InputPartition` and computes it inside a

@@ -70,11 +70,14 @@ object SparkTestSession {
     }
 
   /** Spark jobs started while `f` runs. */
-  def jobsDuring(f: => Unit): Int = {
+  def jobsDuring(f: => Unit): Int = jobStartsDuring(f).size
+
+  /** The start events of the Spark jobs started while `f` runs. */
+  def jobStartsDuring(f: => Unit): Seq[SparkListenerJobStart] = {
     val events = new LinkedBlockingQueue[AnyRef]()
     val listener = jobStarts(events)
     spark.sparkContext.addSparkListener(listener)
-    try marked(events)(f).size
+    try marked(events)(f).collect { case e: SparkListenerJobStart => e }
     finally spark.sparkContext.removeSparkListener(listener)
   }
 

@@ -16,13 +16,17 @@ import graft.tx._
   */
 class StoreContractSpec extends AnyFunSuite {
 
-  private def impls: Seq[(String, () => ObjectStore)] = Seq(
-    "local-fs" -> (() =>
-      new LocalObjectStore(Files.createTempDirectory("store_c").toString)),
-    "in-memory" -> (() => new InMemoryObjectStore),
+  /** A contract row's store, and what stops the server behind it. */
+  private final class Fixture(val store: ObjectStore,
+      val stop: () => Unit = () => ())
+
+  private def impls: Seq[(String, () => Fixture)] = Seq(
+    "local-fs" -> (() => new Fixture(
+      new LocalObjectStore(Files.createTempDirectory("store_c").toString))),
+    "in-memory" -> (() => new Fixture(new InMemoryObjectStore)),
     // latency on every verb so the contract holds with real request gaps
-    "s3-model" -> (() => new FaultInjectingObjectStore(
-      putLatencyMs = 2, listLatencyMs = 1, readLatencyMs = 1)),
+    "s3-model" -> (() => new Fixture(new FaultInjectingObjectStore(
+      putLatencyMs = 2, listLatencyMs = 1, readLatencyMs = 1))),
     // the S3 REST dialect: 200-on-create conditional PUT, ListObjectsV2
     // XML pages via continuation tokens (pageSize=2 forces pagination in
     // every listing test), and injected 409 conflicts the client's
@@ -30,7 +34,8 @@ class StoreContractSpec extends AnyFunSuite {
     "s3-dialect" -> (() => {
       val srv = new graft.store.S3DialectServer(new InMemoryObjectStore,
         conflict409EveryNth = 5)
-      new graft.store.S3ObjectStore(srv.url, pageSize = 2)
+      new Fixture(new graft.store.S3ObjectStore(srv.url, pageSize = 2),
+        () => srv.stop())
     }),
     // the S3 dialect behind REAL SigV4 verification (round 14): the
     // server recomputes the signature from the wire request — canonical
@@ -40,50 +45,60 @@ class StoreContractSpec extends AnyFunSuite {
     "s3-sigv4" -> (() => {
       val srv = new graft.store.S3DialectServer(new InMemoryObjectStore,
         requireSigV4 = Some(("AKIDGRAFT", "graft-secret", "us-east-1")))
-      new graft.store.S3ObjectStore(srv.url, pageSize = 2,
+      new Fixture(new graft.store.S3ObjectStore(srv.url, pageSize = 2,
         sign = graft.store.S3ObjectStore.sigV4("AKIDGRAFT",
-          () => "graft-secret", "us-east-1"))
+          () => "graft-secret", "us-east-1")),
+        () => srv.stop())
     }))
 
   impls.foreach { case (name, mk) =>
+    /** Runs `f` on a fresh store of this row, then stops its server. */
+    def withStore(f: ObjectStore => Unit): Unit = {
+      val fx = mk()
+      try f(fx.store) finally fx.stop()
+    }
+
     test(s"$name: putIfAbsent is create-if-absent; read returns the winner") {
-      val s = mk()
-      assert(s.putIfAbsent("a", "one".getBytes))
-      assert(!s.putIfAbsent("a", "two".getBytes))
-      assert(new String(s.read("a")) == "one")
-      intercept[java.nio.file.NoSuchFileException](s.read("absent"))
-      // a deleted key is free again: the next conditional put wins
-      s.delete("a")
-      assert(s.putIfAbsent("a", "three".getBytes))
-      assert(new String(s.read("a")) == "three")
+      withStore { s =>
+        assert(s.putIfAbsent("a", "one".getBytes))
+        assert(!s.putIfAbsent("a", "two".getBytes))
+        assert(new String(s.read("a")) == "one")
+        intercept[java.nio.file.NoSuchFileException](s.read("absent"))
+        // a deleted key is free again: the next conditional put wins
+        s.delete("a")
+        assert(s.putIfAbsent("a", "three".getBytes))
+        assert(new String(s.read("a")) == "three")
+      }
     }
 
     test(s"$name: listPrefixOrdered is ascending and prefix-filtered") {
-      val s = mk()
-      s.putIfAbsent(TxLog.logName(2), "b".getBytes)
-      s.putIfAbsent(TxLog.logName(0), "a".getBytes)
-      s.putIfAbsent(TxLog.logName(10), "c".getBytes)
-      s.putIfAbsent("_other", "x".getBytes)
-      assert(s.listPrefixOrdered(TxLog.LogPrefix) ==
-        Seq(TxLog.logName(0), TxLog.logName(2), TxLog.logName(10)))
+      withStore { s =>
+        s.putIfAbsent(TxLog.logName(2), "b".getBytes)
+        s.putIfAbsent(TxLog.logName(0), "a".getBytes)
+        s.putIfAbsent(TxLog.logName(10), "c".getBytes)
+        s.putIfAbsent("_other", "x".getBytes)
+        assert(s.listPrefixOrdered(TxLog.LogPrefix) ==
+          Seq(TxLog.logName(0), TxLog.logName(2), TxLog.logName(10)))
+      }
     }
 
     test(s"$name: contention admits exactly one winner") {
-      val s = mk()
-      val pool = Executors.newFixedThreadPool(8)
-      val start = new CountDownLatch(1)
-      val futures = (1 to 8).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = {
-            start.await()
-            s.putIfAbsent("_log_1", s"w$i".getBytes)
-          }
-        })
+      withStore { s =>
+        val pool = Executors.newFixedThreadPool(8)
+        val start = new CountDownLatch(1)
+        val futures = (1 to 8).map { i =>
+          pool.submit(new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              start.await()
+              s.putIfAbsent("_log_1", s"w$i".getBytes)
+            }
+          })
+        }
+        start.countDown()
+        val results = futures.map(_.get(30, TimeUnit.SECONDS))
+        pool.shutdown()
+        assert(results.count(identity) == 1)
       }
-      start.countDown()
-      val results = futures.map(_.get(30, TimeUnit.SECONDS))
-      pool.shutdown()
-      assert(results.count(identity) == 1)
     }
   }
 
